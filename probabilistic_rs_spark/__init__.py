@@ -6,7 +6,7 @@ A from-scratch re-expression of the capabilities of ``oiwn/probabilistic-rs``
 * Sketch states (Bloom, HyperLogLog, Count-Min, t-digest, KLL) are small
   **mergeable binary blobs** built per input partition with vectorized
   Arrow batch kernels (``mapInArrow``), shuffled by group key, and merged
-  with ``applyInPandas`` — the classic partial/final two-level reduce.
+  with ``applyInArrow`` — the classic partial/final two-level reduce.
 * Bloom hashing/sizing is **bit-parity-anchored** to the reference
   (murmur3-32 seed 0 + FNV-1a-64-truncated double hashing,
   ``reference src/hash.rs:33-77``); HLL/CMS/t-digest/KLL derive from the

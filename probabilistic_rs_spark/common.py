@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+
 _KB = 1024.0
 _MB = 1024.0 * 1024.0
 _GB = 1024.0 * 1024.0 * 1024.0
@@ -30,6 +32,26 @@ def state_key(state: bytes) -> str:
     the full state (µs at sketch sizes) is negligible next to a broadcast
     (VERDICT r3 #5)."""
     return hashlib.sha1(state).hexdigest()
+
+
+def split_by_block(blocks: np.ndarray, *arrays: np.ndarray):
+    """Yield ``(block, slice of each array…)`` for each distinct value of
+    the non-negative ids ``blocks``, ascending. One stable argsort
+    replaces a full-length mask per block (no O(blocks × n) pass);
+    stability keeps each block's rows in their original order, so
+    payload bytes do not change."""
+    if not len(blocks):
+        return
+    # narrowest dtype holding every id: numpy's stable sort is a radix
+    # sort for 8/16-bit keys (faster than the masks even at two blocks)
+    keys = blocks.astype(np.min_scalar_type(int(blocks.max())), copy=False)
+    order = np.argsort(keys, kind="stable")
+    ub, starts = np.unique(keys[order], return_index=True)
+    bounds = np.append(starts, len(order)).tolist()
+    in_order = [a[order] for a in arrays]
+    for i, b in enumerate(ub.tolist()):
+        s, e = bounds[i], bounds[i + 1]
+        yield (b, *(a[s:e] for a in in_order))
 
 
 def lru_evict(cache: dict, max_entries: int, release=None) -> None:

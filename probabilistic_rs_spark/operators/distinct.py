@@ -3,7 +3,7 @@
 ``approx_distinct(df, 'url', ['lang', 'day'])`` ≙ the reference-mandated
 "distinct URLs per (lang, day)" plan (SURVEY.md §2.9.1):
 column-pruned scan → JVM xxhash64 → mapInArrow partial HLLs →
-shuffle-by-key of register states → applyInPandas register-max merge →
+shuffle-by-key of register states → applyInArrow register-max merge →
 estimate column.
 """
 

@@ -593,6 +593,8 @@ def build_cms_blocks_df(
     def derive(batches):
         import pyarrow as pa
 
+        from probabilistic_rs_spark.common import split_by_block
+
         acc: dict = {}  # (row, block) -> list[(offs int32[], cnts int64[])]
         for batch in batches:
             if batch.num_rows == 0:
@@ -610,9 +612,8 @@ def build_cms_blocks_df(
                 cells = (h1 + np.uint64(j) * h2) & mask
                 blocks = cells // cpb_
                 offs = (cells - blocks * cpb_).astype(np.int32)
-                for b in np.unique(blocks):
-                    sel = blocks == b
-                    acc.setdefault((j, int(b)), []).append((offs[sel], c[sel]))
+                for b, o, cc in split_by_block(blocks, offs, c):
+                    acc.setdefault((j, b), []).append((o, cc))
         if not acc:
             return
         rows, blks, offs_p, cnts_p = [], [], [], []

@@ -5,7 +5,7 @@ This is the Spark restatement of the reference's whole execution model
 lock — ``src/bloom/filter.rs:395-438``) becomes a ``mapInArrow`` kernel
 that absorbs a whole Arrow batch per Python call; the merge step the
 reference never ships (bitwise OR / register max / counter add /
-compactor merge) becomes an ``applyInPandas`` group-merge after a single
+compactor merge) becomes an ``applyInArrow`` group-merge after a single
 shuffle of tiny binary states.
 
 Plan shape (the only network boundary is the one partial-state shuffle):
@@ -15,7 +15,7 @@ Plan shape (the only network boundary is the one partial-state shuffle):
       → mapInArrow partial-build                 (1 row per key per partition)
       → exchange on group key                    (bytes ≪ input data)
       → [optional pre-merge by pid % fanin]      (tree reduce for huge fan-in)
-      → applyInPandas merge                      (1 row per key)
+      → applyInArrow merge                       (1 row per key)
 
 Scale notes (100 TB / 1000 executors):
 * Shuffled volume is ``n_keys_per_partition × state_bytes`` — independent
@@ -38,9 +38,11 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
+    MapType,
     StructField,
     StructType,
 )
@@ -281,6 +283,43 @@ def _prepare_value(spec: SketchSpec, batch, colname: str):
     return pad_batch_arrow(arr, scratch_key=f"sketch:{colname}")
 
 
+def _group_rows(batch, group_cols: list[str]) -> list[tuple[tuple, np.ndarray]]:
+    """``(key tuple, row indices)`` per distinct group key of ``batch``,
+    in first-appearance order with ascending row indices. Grouping runs
+    in Arrow, so a null key is one group of its own (as in Spark's
+    ``groupBy``) and keeps its column type: no float-NaN coercion."""
+    import pyarrow as pa
+
+    tbl = pa.Table.from_batches([batch]).select(group_cols)
+    tbl = tbl.append_column("__row", pa.array(np.arange(batch.num_rows)))
+    # single-threaded hash grouping emits groups in first-appearance order
+    grouped = tbl.group_by(group_cols, use_threads=False).aggregate(
+        [("__row", "list")]
+    )
+    lists = grouped.column("__row_list").combine_chunks()
+    offsets = lists.offsets.to_numpy()
+    rows = lists.values.to_numpy()
+    keys = zip(*(grouped.column(g).to_pylist() for g in group_cols))
+    return [
+        (key, rows[offsets[i] : offsets[i + 1]]) for i, key in enumerate(keys)
+    ]
+
+
+def _check_group_cols(schema: StructType, group_cols: list[str]) -> None:
+    """Arrow's hash grouping takes no nested keys; reject them here,
+    before any job launches, rather than inside every task."""
+    nested = [
+        g
+        for g in group_cols
+        if isinstance(schema[g].dataType, (StructType, ArrayType, MapType))
+    ]
+    if nested:
+        raise SketchConfigError(
+            f"group columns {nested} have nested types (struct/array/map); "
+            "sketch aggregation groups by atomic columns only"
+        )
+
+
 def sketch_partials(
     df: DataFrame, group_cols: list[str], specs: list[SketchSpec]
 ) -> DataFrame:
@@ -296,6 +335,7 @@ def sketch_partials(
     projected = df.select(*proj)
 
     in_schema = projected.schema
+    _check_group_cols(in_schema, group_cols)
     out_fields = [in_schema[g] for g in group_cols]
     out_fields.append(StructField("__pid", IntegerType(), False))
     out_fields += [StructField(s.state_col, BinaryType(), False) for s in specs]
@@ -306,7 +346,6 @@ def sketch_partials(
     group_local = list(group_cols)
 
     def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pandas as pd
         import pyarrow as pa
         from pyspark import TaskContext
 
@@ -321,12 +360,7 @@ def sketch_partials(
                 _prepare_value(s, batch, f"__v_{s.name}") for s in specs_local
             ]
             if group_local:
-                gframe = pa.Table.from_batches([batch]).select(group_local).to_pandas()
-                groups = gframe.groupby(group_local, sort=False, dropna=False).indices
-                items = [
-                    (k if isinstance(k, tuple) else (k,), np.asarray(v))
-                    for k, v in groups.items()
-                ]
+                items = _group_rows(batch, group_local)
             else:
                 items = [((), np.arange(n))]
             for key, rows in items:
@@ -356,27 +390,45 @@ def sketch_partials(
     return projected.mapInArrow(build, out_schema)
 
 
+def grouped_fold(df: DataFrame, keys: list[str], fold_fn, schema: StructType) -> DataFrame:
+    """Group ``df`` by ``keys`` and map each group's rows, as one
+    ``pa.Table``, through ``fold_fn`` to a ``pa.Table`` of ``schema``.
+    The group crosses the Python boundary as Arrow columns: no pandas
+    frame is built per group, and key columns keep their Arrow type
+    (nulls, dates and strings pass through as they are)."""
+    return df.groupBy(*keys).applyInArrow(fold_fn, schema)
+
+
 def _merge_fn_factory(group_cols: list[str], specs: list[SketchSpec], out_schema):
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(out_schema)
+    classes = [type(s.make()) for s in specs]
+    state_cols = [s.state_col for s in specs]
+
+    def merge_fn(tbl: "pa.Table") -> "pa.Table":
         # deterministic merge order regardless of shuffle arrival
-        pdf = pdf.sort_values("__pid", kind="stable")
-        row: dict = {g: pdf[g].iloc[0] for g in group_cols}
-        row["__pid"] = int(pdf["__pid"].iloc[0])
-        for spec in specs:
-            blobs = pdf[spec.state_col]
-            cls = type(spec.make())
-            merged = cls.from_bytes(blobs.iloc[0])
+        tbl = tbl.take(pc.sort_indices(tbl.column("__pid")))
+        cols = [tbl.column(g).slice(0, 1) for g in group_cols]
+        cols.append(tbl.column("__pid").slice(0, 1))
+        for cls, state_col in zip(classes, state_cols):
+            blobs = tbl.column(state_col).to_pylist()
+            merged = cls.from_bytes(blobs[0])
             # merge_bytes folds serialized partials in place (one dense
             # allocation per reducer, not one per partial — Bloom/CMS)
             fold = getattr(merged, "merge_bytes", None)
-            for b in blobs.iloc[1:]:
+            for b in blobs[1:]:
                 if fold is not None:
                     fold(b)
                 else:
                     merged.merge(cls.from_bytes(b))
-            row[spec.state_col] = merged.to_bytes()
-        row["n_updates"] = int(pdf["n_updates"].sum())
-        return pd.DataFrame([{f.name: row[f.name] for f in out_schema.fields}])
+            cols.append(pa.array([merged.to_bytes()], type=pa.binary()))
+        n = pc.sum(tbl.column("n_updates")).as_py()
+        cols.append(pa.array([n], type=pa.int64()))
+        return pa.Table.from_arrays(cols, schema=arrow_schema)
 
     return merge_fn
 
@@ -400,22 +452,17 @@ def sketch_merge(
     mid_fields += [StructField(s.state_col, BinaryType(), False) for s in specs]
     mid_fields.append(StructField("n_updates", LongType(), False))
     mid_schema = StructType(mid_fields)
+    fn = _merge_fn_factory(group_cols, specs, mid_schema)
 
     cur = partials
     if tree_fanin and tree_fanin > 1:
         pre = cur.withColumn("__bucket", F.pmod(F.col("__pid"), F.lit(tree_fanin)))
-        fn = _merge_fn_factory(group_cols, specs, mid_schema)
-        cur = pre.groupBy(*(group_cols + ["__bucket"])).applyInPandas(fn, mid_schema)
+        cur = grouped_fold(pre, group_cols + ["__bucket"], fn, mid_schema)
 
-    fn = _merge_fn_factory(group_cols, specs, mid_schema)
     if group_cols:
-        merged = cur.groupBy(*group_cols).applyInPandas(fn, mid_schema)
+        merged = grouped_fold(cur, group_cols, fn, mid_schema)
     else:
-        merged = (
-            cur.withColumn("__g", F.lit(1))
-            .groupBy("__g")
-            .applyInPandas(fn, mid_schema)
-        )
+        merged = grouped_fold(cur.withColumn("__g", F.lit(1)), ["__g"], fn, mid_schema)
     return merged.drop("__pid")
 
 
@@ -544,7 +591,7 @@ def with_quantiles(
     """Adds an array<double> column of quantile estimates from a
     t-digest/KLL state column."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
+    from pyspark.sql.types import DoubleType
 
     cls = TDigest if kind == "tdigest" else KLLSketch
     qs_local = list(qs)

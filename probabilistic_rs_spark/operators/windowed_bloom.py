@@ -525,6 +525,7 @@ def build_windowed_bloom_blocks_df(
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
+    from probabilistic_rs_spark.common import split_by_block
     from probabilistic_rs_spark.operators.sketch_agg import (
         native_bloom_base_hash_exprs,
     )
@@ -574,8 +575,8 @@ def build_windowed_bloom_blocks_df(
                 blocks = (p >> np.uint64(6)) // np.uint64(wpb_)
                 offs = (p - blocks * np.uint64(bits_per_block)).astype(np.int32)
                 lvl_acc = acc.setdefault(lvl, {})
-                for b in np.unique(blocks):
-                    lvl_acc.setdefault(int(b), []).append(offs[blocks == b])
+                for b, o in split_by_block(blocks, offs):
+                    lvl_acc.setdefault(b, []).append(o)
         if not acc:
             return
         levels, blks, payloads = [], [], []

@@ -217,3 +217,19 @@ class TestRound7FamilyPlans:
         assert plan.count("Exchange hashpartitioning") <= 1
         scan_line = [l for l in plan.splitlines() if "ReadSchema" in l]
         assert scan_line and "l_comment" not in scan_line[0]
+
+
+class TestMergeShape:
+    def test_sketch_merge_is_one_arrow_group_map_per_level(self, spark):
+        """The merge runs as Arrow group maps: one per reduce level (two
+        with a ``tree_fanin`` pre-merge) and no pandas group map."""
+        from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
+
+        orders = spark.read.parquet(f"{SF}/orders.parquet")
+        spec = SketchSpec("h", "hll", "o_custkey", {"p": 10})
+        for fanin, n_maps in ((None, 1), (2, 2)):
+            plan = _executed(
+                sketch_aggregate(orders, ["o_orderpriority"], [spec], tree_fanin=fanin)
+            )
+            assert plan.count("FlatMapGroupsInArrow") == n_maps, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan
