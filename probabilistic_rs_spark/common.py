@@ -107,6 +107,33 @@ def ensure_persisted(df, cache: dict | None = None, max_entries: int = 16):
     return df
 
 
+def block_geometry(blocks_df, geom_cols: list[str], what: str, *extra_aggs):
+    """``(geometry ints, agg row)`` of a partitioned probe family's blocks
+    table, or None when it is empty: ONE agg job reads max and min of
+    each self-describing geometry column, plus ``extra_aggs`` (e.g. the
+    windowed family's ``collect_set(level)``). Raises on a table mixing
+    geometries — probing two builds' blocks at once would silently mix
+    mismatched positions."""
+    from pyspark.sql import functions as F
+
+    from probabilistic_rs_spark.errors import SketchConfigError
+
+    row = blocks_df.agg(
+        *(F.max(c).alias(f"{c}_hi") for c in geom_cols),
+        *(F.min(c).alias(f"{c}_lo") for c in geom_cols),
+        *extra_aggs,
+    ).head()
+    if row is None or row[f"{geom_cols[0]}_hi"] is None:
+        return None
+    hi = tuple(row[f"{c}_hi"] for c in geom_cols)
+    if hi != tuple(row[f"{c}_lo"] for c in geom_cols):
+        ranges = ", ".join(f"{c} {row[c + '_lo']}..{row[c + '_hi']}" for c in geom_cols)
+        raise SketchConfigError(
+            f"blocks_df mixes {what} ({ranges}) — probe one build's blocks at a time"
+        )
+    return tuple(int(v) for v in hi), row
+
+
 def op_masks(ops):
     """Validate an ops-log tag series (the ``op_col`` of
     ``cuckoo_apply_ops_df`` / ``quotient_apply_ops_df``) and return

@@ -127,6 +127,22 @@ class BoundedCandidateTracker:
         ]
 
 
+def _merge_partials(pdf: pd.DataFrame) -> tuple[CountMinSketch, dict]:
+    """Fold ``cms_heavy_hitters`` partial rows: the CMS matrices added in
+    partition-id order, and the candidate union as hash -> key (the
+    first key seen for a hash wins)."""
+    pdf = pdf.sort_values("__pid", kind="stable")
+    blobs = pdf["cms_state"]
+    cms = CountMinSketch.from_bytes(blobs.iloc[0])
+    for b in blobs.iloc[1:]:
+        cms.merge_bytes(b)
+    key_by_hash: dict = {}
+    for keys, hashes in zip(pdf["cand_keys"], pdf["cand_hashes"]):
+        for k, h in zip(keys, hashes):
+            key_by_hash.setdefault(int(h), k)
+    return cms, key_by_hash
+
+
 def cms_heavy_hitters(
     df: DataFrame,
     key_col: str,
@@ -194,21 +210,13 @@ def cms_heavy_hitters(
     partials = projected.mapInArrow(build, _PARTIAL_SCHEMA)
 
     def premerge(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Bucket-level partial merge: CMS add + candidate union (deduped
-        by hash). Output shape identical to a single partial row."""
-        pdf = pdf.sort_values("__pid", kind="stable")
-        blobs = pdf["cms_state"]
-        cms = CountMinSketch.from_bytes(blobs.iloc[0])
-        for b in blobs.iloc[1:]:
-            cms.merge_bytes(b)
-        key_by_hash: dict = {}
-        for keys, hashes in zip(pdf["cand_keys"], pdf["cand_hashes"]):
-            for k, h in zip(keys, hashes):
-                key_by_hash.setdefault(int(h), k)
+        """Bucket-level partial merge. Output shape identical to a single
+        partial row."""
+        cms, key_by_hash = _merge_partials(pdf)
         hs = sorted(key_by_hash.keys())
         return pd.DataFrame(
             {
-                "__pid": [int(pdf["__pid"].iloc[0])],
+                "__pid": [int(pdf["__pid"].min())],
                 "cms_state": [cms.to_bytes()],
                 "cand_keys": [[key_by_hash[h] for h in hs]],
                 "cand_hashes": [hs],
@@ -224,15 +232,7 @@ def cms_heavy_hitters(
         )
 
     def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__pid", kind="stable")
-        blobs = pdf["cms_state"]
-        cms = CountMinSketch.from_bytes(blobs.iloc[0])
-        for b in blobs.iloc[1:]:
-            cms.merge_bytes(b)
-        key_by_hash: dict = {}
-        for keys, hashes in zip(pdf["cand_keys"], pdf["cand_hashes"]):
-            for k, h in zip(keys, hashes):
-                key_by_hash.setdefault(int(h), k)
+        cms, key_by_hash = _merge_partials(pdf)
         if not key_by_hash:
             return pd.DataFrame({"key": [], "est_count": []})
         hs = np.array(sorted(key_by_hash.keys()), dtype=np.int64).view(np.uint64)
@@ -556,12 +556,15 @@ def build_cms_blocks_df(
     (a plain hash aggregate — MAP-SIDE COMBINE, so the shuffle is
     bounded by distinct keys, not input rows; grouping by the hash is
     semantically identical to the CMS, whose cells derive from that same
-    hash), explode to their d (row, cell) targets, shuffle to their
-    (row, block), and each block sums its own cells in one numpy
-    ``add.at`` pass. Returns ``(row, block, cells, d, w,
+    hash), each aggregated row derives its d (row, cell) targets with the
+    KM arithmetic of ``sketches/cms.py:_cells``, and
+    :func:`~probabilistic_rs_spark.operators.sketch_agg.packed_block_build`
+    sums the counts into their block. Returns ``(row, block, cells, d, w,
     cells_per_block)`` — blocks that received no counts are absent
     (probes read them as zero). One build's blocks per table — the same
     contract as every partitioned family."""
+    from probabilistic_rs_spark.operators.sketch_agg import packed_block_build
+
     cpb = int(cells_per_block)
     if cpb <= 0:
         raise SketchConfigError("cells_per_block must be positive")
@@ -569,117 +572,33 @@ def build_cms_blocks_df(
     counts = df.groupBy(
         F.xxhash64(F.col(key_col).cast("string")).alias("__h")
     ).agg(F.count(F.lit(1)).alias("__c"))
+    mask = np.uint64(w - 1)
 
-    # Round 8 (guide §2.3, same packing as the windowed-bloom block
-    # build): the former explode shipped one ~24 B UnsafeRow per (key,
-    # row) cell target (d·distinct rows) into the scatter shuffle plus an
-    # applyInPandas sort of all of them. The cell targets are now derived
-    # in a mapInArrow stage over the aggregated (hash, count) rows —
-    # identical KM arithmetic in uint64 — and each (partition, row,
-    # block) emits ONE row with packed int32 offsets + int64 counts
-    # (12 B/cell, no row overhead). The scatter sums them per block with
-    # one np.add.at. Cell sums are order-free, so the blocks table is
-    # bit-identical to the explode formulation's.
-    mid_schema = StructType(
-        [
-            StructField("row", IntegerType(), False),
-            StructField("block", IntegerType(), False),
-            StructField("offs", BinaryType(), False),
-            StructField("cnts", BinaryType(), False),
-        ]
+    def cells(batch):
+        h = batch.column(0).to_numpy(zero_copy_only=False).view(np.uint64)
+        c = batch.column(1).to_numpy(zero_copy_only=False)
+        h1 = h >> np.uint64(32)
+        h2 = (h & np.uint64(0xFFFFFFFF)) | np.uint64(1)
+        for j in range(d):
+            yield j, (h1 + np.uint64(j) * h2) & mask, c
+
+    def scatter(n, offs, cnts):
+        out = np.zeros(n, dtype=np.int64)
+        np.add.at(out, offs, cnts)
+        return out
+
+    blocks = packed_block_build(
+        counts, StructField("row", IntegerType(), False), cells, w, cpb, scatter,
+        weighted=True,
     )
-    d_, w_u, cpb_ = int(d), np.uint64(w), np.uint64(cpb)
-
-    def derive(batches):
-        import pyarrow as pa
-
-        from probabilistic_rs_spark.common import split_by_block
-
-        acc: dict = {}  # (row, block) -> list[(offs int32[], cnts int64[])]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            h = batch.column(0).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            ).view(np.uint64)
-            c = batch.column(1).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            h1 = h >> np.uint64(32)
-            h2 = (h & np.uint64(0xFFFFFFFF)) | np.uint64(1)
-            mask = w_u - np.uint64(1)
-            for j in range(d_):
-                cells = (h1 + np.uint64(j) * h2) & mask
-                blocks = cells // cpb_
-                offs = (cells - blocks * cpb_).astype(np.int32)
-                for b, o, cc in split_by_block(blocks, offs, c):
-                    acc.setdefault((j, b), []).append((o, cc))
-        if not acc:
-            return
-        rows, blks, offs_p, cnts_p = [], [], [], []
-        for (j, b), chunks in acc.items():
-            rows.append(j)
-            blks.append(b)
-            if len(chunks) == 1:
-                o, cc = chunks[0]
-            else:
-                o = np.concatenate([x[0] for x in chunks])
-                cc = np.concatenate([x[1] for x in chunks])
-            offs_p.append(o.tobytes())
-            cnts_p.append(cc.tobytes())
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(rows, type=pa.int32()),
-                pa.array(blks, type=pa.int32()),
-                pa.array(offs_p, type=pa.binary()),
-                pa.array(cnts_p, type=pa.binary()),
-            ],
-            names=["row", "block", "offs", "cnts"],
-        )
-
-    mid = counts.mapInArrow(derive, mid_schema)
-    schema = (
-        "row int, block int, cells array<bigint>, d int, w bigint, "
-        "cells_per_block int"
+    return blocks.select(
+        "row",
+        "block",
+        F.col("values").alias("cells"),
+        F.lit(d).cast("int").alias("d"),
+        F.lit(w).cast("long").alias("w"),
+        F.lit(cpb).cast("int").alias("cells_per_block"),
     )
-
-    def scatter(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        row, block = int(key[0]), int(key[1])
-        blen = min(cpb, w - block * cpb)
-        cells = np.zeros(blen, dtype=np.int64)
-        offs = np.frombuffer(b"".join(pdf["offs"]), dtype=np.int32)
-        cnts = np.frombuffer(b"".join(pdf["cnts"]), dtype=np.int64)
-        np.add.at(cells, offs.astype(np.int64), cnts)
-        return pd.DataFrame(
-            {
-                "row": pd.Series([row], dtype="int32"),
-                "block": pd.Series([block], dtype="int32"),
-                "cells": [cells.tolist()],
-                "d": pd.Series([d], dtype="int32"),
-                "w": pd.Series([w], dtype="int64"),
-                "cells_per_block": pd.Series([cpb], dtype="int32"),
-            }
-        )
-
-    return mid.groupBy("row", "block").applyInPandas(scatter, schema)
-
-
-def _cms_blocks_meta(blocks_df: DataFrame) -> tuple[int, int, int] | None:
-    row = blocks_df.agg(
-        F.max("d").alias("d_hi"), F.min("d").alias("d_lo"),
-        F.max("w").alias("w_hi"), F.min("w").alias("w_lo"),
-        F.max("cells_per_block").alias("c_hi"), F.min("cells_per_block").alias("c_lo"),
-    ).head()
-    if row is None or row["d_hi"] is None:
-        return None
-    if (row["d_hi"], row["w_hi"], row["c_hi"]) != (row["d_lo"], row["w_lo"], row["c_lo"]):
-        raise SketchConfigError(
-            "blocks_df mixes CMS geometries "
-            f"(d {row['d_lo']}..{row['d_hi']}, w {row['w_lo']}..{row['w_hi']}, "
-            f"cells_per_block {row['c_lo']}..{row['c_hi']}) — probe one "
-            "build's blocks at a time"
-        )
-    return int(row["d_hi"]), int(row["w_hi"]), int(row["c_hi"])
 
 
 def cms_partitioned_probe(
@@ -714,13 +633,13 @@ def cms_partitioned_probe(
     unpersisted table is persisted internally via
     ``common.ensure_persisted`` (LRU-bounded; already-persisted tables
     pass through untouched)."""
-    from probabilistic_rs_spark.common import ensure_persisted
+    from probabilistic_rs_spark.common import block_geometry, ensure_persisted
 
     blocks_df = ensure_persisted(blocks_df)
-    meta = _cms_blocks_meta(blocks_df)
+    meta = block_geometry(blocks_df, ["d", "w", "cells_per_block"], "CMS geometries")
     if meta is None:
         return probe_df.withColumn(out_col, F.lit(0).cast("bigint"))
-    d, w, cpb = meta
+    (d, w, cpb), _ = meta
     pr = probe_df.withColumn(
         "__cmsph", F.xxhash64(F.col(key_col).cast("string"))
     )

@@ -479,55 +479,25 @@ def build_windowed_bloom_blocks_df(
     target_fpr: float = 0.01,
     words_per_block: int = DEFAULT_WORDS_PER_BLOCK,
 ) -> DataFrame:
-    """Build the blocks table DIRECTLY from events — no whole-level state
-    is ever materialized, so this is the build path for level sizes where
-    even one task cannot hold a level's bit vector (the regime past both
-    the broadcast budget AND the per-task build): the k KM positions are
-    computed JVM-side per row, exploded to ``(level, block, word, bit)``,
-    shuffled to their block, and each block scatters its own bits in one
-    numpy pass (O(rows_in_block + block_words)). Per-task memory = one
-    block. Bit-identical to exploding a built level (same position
-    expressions, same word layout) — asserted in tests.
+    """Build the blocks table DIRECTLY from events, never materializing a
+    whole level: the build path for levels too large for one task. Each
+    row's k KM bit positions (the uint64 math of
+    ``NativeBloomSketch.positions_from_base_hashes`` over the JVM base
+    hashes) are grouped by level and ORed into their block by
+    :func:`~probabilistic_rs_spark.operators.sketch_agg.packed_block_build`.
+    Bit-identical to exploding a built level (same positions, same word
+    layout) — asserted in tests. Prefer the state-aggregate build
+    (:func:`windowed_bloom_states` → :func:`windowed_states_to_blocks_df`)
+    whenever a level fits one task.
 
-    Why the scatter is an Arrow kernel and not SQL (round-6 measurement):
-    a pure-JVM assembly was tried and REVERTED — per-word ``bit_or`` then
-    ``map_from_entries`` + per-index ``try_element_at`` is O(words²) per
-    block because Spark map lookups are linear scans (200+ s at sf0.1 vs
-    7 s for this kernel), and the ``bit_or`` pre-combine buys ~nothing
-    because at optimal Bloom sizing positions are nearly unique per word.
-
-    Round 8 (guide §2.3, "aggregate before you shuffle"): the former
-    one-row-per-position explode shuffled ~53 B of UnsafeRow per bit
-    position (374 MiB / 7·10⁶ rows at sf0.1). The build now computes the
-    k KM positions per row INSIDE a ``mapInArrow`` partial stage (same
-    uint64 math as ``NativeBloomSketch.positions_from_base_hashes`` —
-    bit-equal to the JVM expressions by the same <2^63 bound) and emits
-    ONE row per (input partition, level, block) carrying the packed
-    int32 within-block bit offsets — 4 B per position, no per-row
-    overhead (~28 MiB at sf0.1, a 13× shuffle-byte cut; build wall time
-    1.32 s → measured below). The merge stage ORs each block's offset
-    arrays in one numpy scatter. Bit-identical output (same positions,
-    same word layout, OR is order-free) — asserted in tests.
-
-    Per-task memory stays bounded: the partial stage holds one
-    partition's offset lists (O(rows·k) int32), the merge stage one
-    block (~``words_per_block``·8 B) + its offset arrays; prefer the
-    state-aggregate build (:func:`windowed_bloom_states` →
-    :func:`windowed_states_to_blocks_df`, which shuffles only per-
-    partition partial states) whenever a level fits one task.
-
-    ``level_col`` is any groupable bucketing column (an event-time window
-    start, a day number, …)."""
-    from typing import Iterator
-
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
-
-    from probabilistic_rs_spark.common import split_by_block
+    ``level_col`` is any atomic bucketing column (an event-time window
+    start, a day number, …); a null level is one level of its own, as in
+    Spark's ``groupBy``. A nested level type raises before any job."""
     from probabilistic_rs_spark.operators.sketch_agg import (
+        _check_group_cols,
+        _group_rows,
         native_bloom_base_hash_exprs,
+        packed_block_build,
     )
 
     wpb = int(words_per_block)
@@ -542,110 +512,35 @@ def build_windowed_bloom_blocks_df(
     proj = df.select(
         F.col(level_col).alias("level"), h1e.alias("__h1"), h2e.alias("__h2")
     )
-    level_field = proj.schema["level"]
-    mid_schema = StructType(
-        [
-            level_field,
-            StructField("block", IntegerType(), False),
-            StructField("offs", BinaryType(), False),
-        ]
-    )
-    arrow_mid = to_arrow_schema(mid_schema)
-    bits_per_block = wpb * 64
-    m_u, k_, wpb_ = np.uint64(m), int(k), int(wpb)
+    _check_group_cols(proj.schema, ["level"])
+    m_u, i = np.uint64(m), np.arange(k, dtype=np.uint64)[None, :]
 
-    def partials(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        acc: dict = {}  # level value -> dict[block -> list[np.ndarray int32 offs]]
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            h1 = batch.column(1).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            ).view(np.uint64)
-            h2 = batch.column(2).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            ).view(np.uint64)
-            i = np.arange(k_, dtype=np.uint64)[None, :]
-            pos = (h1[:, None] + i * h2[:, None]) % m_u  # (n, k), < m < 2^32
-            gframe = pa.Table.from_batches([batch]).select(["level"]).to_pandas()
-            groups = gframe.groupby("level", sort=False, dropna=False).indices
-            for lvl, rows in groups.items():
-                p = pos[np.asarray(rows)].ravel()
-                blocks = (p >> np.uint64(6)) // np.uint64(wpb_)
-                offs = (p - blocks * np.uint64(bits_per_block)).astype(np.int32)
-                lvl_acc = acc.setdefault(lvl, {})
-                for b, o in split_by_block(blocks, offs):
-                    lvl_acc.setdefault(b, []).append(o)
-        if not acc:
-            return
-        levels, blks, payloads = [], [], []
-        for lvl, lvl_acc in acc.items():
-            for b, chunks in lvl_acc.items():
-                levels.append(lvl)
-                blks.append(b)
-                payloads.append(
-                    chunks[0].tobytes()
-                    if len(chunks) == 1
-                    else np.concatenate(chunks).tobytes()
-                )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(levels, type=arrow_mid.field(0).type),
-                pa.array(blks, type=pa.int32()),
-                pa.array(payloads, type=pa.binary()),
-            ],
-            schema=arrow_mid,
+    def positions(batch):
+        h1, h2 = (
+            batch.column(c).to_numpy(zero_copy_only=False).view(np.uint64)[:, None]
+            for c in (1, 2)
         )
+        pos = (h1 + i * h2) % m_u  # (n, k), < m < 2^32
+        for (lvl,), rows in _group_rows(batch, ["level"]):
+            yield lvl, pos[rows].ravel(), None
 
-    mid = proj.mapInArrow(partials, mid_schema)
-    schema = _blocks_schema(level_field.dataType)
-
-    def scatter(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        lvl, block = key[0], int(key[1])
-        blen = min(wpb, n_words - block * wpb)
-        words = np.zeros(blen, dtype=np.uint64)
-        offs = np.frombuffer(b"".join(pdf["offs"]), dtype=np.int32)
-        widx = (offs >> 6).astype(np.int64)
+    def scatter(n_bits, offs, _):
+        words = np.zeros(n_bits >> 6, dtype=np.uint64)
         bits = np.uint64(1) << (offs & 63).astype(np.uint64)
-        np.bitwise_or.at(words, widx, bits)
-        return pd.DataFrame(
-            {
-                "level": [lvl],
-                "block": pd.Series([block], dtype="int32"),
-                "words": [words.view(np.int64).tolist()],
-                "m": pd.Series([m], dtype="int64"),
-                "k": pd.Series([k], dtype="int32"),
-                "words_per_block": pd.Series([wpb], dtype="int32"),
-            }
-        )
+        np.bitwise_or.at(words, offs >> 6, bits)
+        return words.view(np.int64)
 
-    return mid.groupBy("level", "block").applyInPandas(scatter, schema)
-
-
-def _blocks_meta(blocks_df: DataFrame) -> tuple[int, int, int, list] | None:
-    """(m, k, words_per_block, distinct levels) from the self-describing
-    columns — ONE tiny agg job covers both the geometry check and the
-    window list (`collect_set(level)` is O(active levels), driver-safe by
-    the same argument as the reference's O(num_levels) level metadata).
-    Raises on a table mixing geometries (probing two builds' blocks at
-    once would silently AND mismatched positions)."""
-    row = blocks_df.agg(
-        F.max("m").alias("m_hi"), F.min("m").alias("m_lo"),
-        F.max("k").alias("k_hi"), F.min("k").alias("k_lo"),
-        F.max("words_per_block").alias("w_hi"), F.min("words_per_block").alias("w_lo"),
-        F.collect_set("level").alias("levels"),
-    ).head()
-    if row is None or row["m_hi"] is None:
-        return None
-    if (row["m_hi"], row["k_hi"], row["w_hi"]) != (row["m_lo"], row["k_lo"], row["w_lo"]):
-        raise SketchConfigError(
-            "blocks_df mixes geometries "
-            f"(m {row['m_lo']}..{row['m_hi']}, k {row['k_lo']}..{row['k_hi']}, "
-            f"words_per_block {row['w_lo']}..{row['w_hi']}) — probe one "
-            "build's blocks at a time"
-        )
-    return int(row["m_hi"]), int(row["k_hi"]), int(row["w_hi"]), list(row["levels"])
+    blocks = packed_block_build(
+        proj, proj.schema["level"], positions, n_words * 64, wpb * 64, scatter
+    )
+    return blocks.select(
+        "level",
+        "block",
+        F.col("values").alias("words"),
+        F.lit(m).cast("long").alias("m"),
+        F.lit(k).cast("int").alias("k"),
+        F.lit(wpb).cast("int").alias("words_per_block"),
+    )
 
 
 def windowed_bloom_partitioned_probe(
@@ -694,13 +589,19 @@ def windowed_bloom_partitioned_probe(
     ``num_levels`` restricts to the N most recent levels; ``as_of``
     alone is a pure ``level <= as_of`` cutoff (no implicit top-N —
     ADVICE r6); together, the N most recent at/before the cutoff."""
-    from probabilistic_rs_spark.common import ensure_persisted
+    from probabilistic_rs_spark.common import block_geometry, ensure_persisted
 
     blocks_df = ensure_persisted(blocks_df)
-    meta = _blocks_meta(blocks_df)
+    # one tiny agg job: the geometry check plus the distinct levels
+    # (O(active levels), driver-safe like the reference's level metadata)
+    meta = block_geometry(
+        blocks_df, ["m", "k", "words_per_block"], "geometries",
+        F.collect_set("level").alias("levels"),
+    )
     if meta is None:
         return probe_df.withColumn(out_col, F.lit(False))
-    m, k, wpb, levels = meta
+    (m, k, wpb), row = meta
+    levels = list(row["levels"])
     from probabilistic_rs_spark.operators.sketch_agg import (
         native_bloom_base_hash_exprs,
     )

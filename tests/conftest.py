@@ -39,3 +39,37 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture
+def map_in_arrow_rows():
+    """``rows(df)``: the rows ``df``'s ``MapInArrow`` stages handed back
+    to the JVM in the last action run on ``df``, read from the executed
+    plan's SQL metrics (descending through the adaptive final plan and
+    its query stages)."""
+
+    def node_rows(plan) -> int:
+        cls = plan.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [plan.finalPhysicalPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [plan.plan()]
+        else:
+            seq = plan.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        own = 0
+        if plan.nodeName() == "MapInArrow":
+            own = int(plan.metrics().apply("pythonNumRowsReceived").value())
+        return own + sum(node_rows(k) for k in kids)
+
+    return lambda df: node_rows(df._jdf.queryExecution().executedPlan())
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """Feed Python stages 64-row Arrow batches, so each task sees many."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    yield
+    spark.conf.set(key, old)

@@ -8,7 +8,9 @@ KM cell lookups shuffled to their block, min-combine per key.
   driver-built CountMinSketch on the same data;
 * never-seen keys estimate 0 (when their cells are empty);
 * mixed geometries and empty tables fail safe;
-* the probe plan needs no broadcast (shuffle equi-joins only).
+* the probe plan needs no broadcast (shuffle equi-joins only);
+* flushing the partial stage at any byte bound leaves the blocks
+  bit-identical.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators import sketch_agg
 from probabilistic_rs_spark.operators.heavy_hitters import (
     build_cms_blocks_df,
     build_cms_state,
@@ -131,3 +134,21 @@ class TestCmsPartitioned:
                 conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
             else:
                 conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
+
+
+def test_flush_bound_keeps_blocks_bit_identical(
+    built, monkeypatch, map_in_arrow_rows, small_arrow_batches
+):
+    df = built[0]
+
+    def build():
+        blocks = build_cms_blocks_df(df, "key", eps=EPS, delta=DELTA, cells_per_block=64)
+        rows = sorted((r["row"], r["block"], tuple(r["cells"])) for r in blocks.collect())
+        return rows, map_in_arrow_rows(blocks)
+
+    whole, whole_partials = build()
+    monkeypatch.setattr(sketch_agg, "PACKED_FLUSH_BYTES", 256)
+    flushed, flushed_partials = build()
+    assert flushed == whole
+    # each partition flushed many times: more partial rows, same blocks
+    assert flushed_partials > whole_partials

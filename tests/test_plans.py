@@ -5,6 +5,8 @@ and no cartesian products in candidate-generation joins."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,4 +234,24 @@ class TestMergeShape:
                 sketch_aggregate(orders, ["o_orderpriority"], [spec], tree_fanin=fanin)
             )
             assert plan.count("FlatMapGroupsInArrow") == n_maps, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan
+
+    def test_block_builds_are_one_arrow_map_and_one_arrow_group_map(self, spark):
+        """Both packed-block builds run one ``MapInArrow`` partial stage
+        and one Arrow group-map scatter, and no pandas group map."""
+        from probabilistic_rs_spark.operators.heavy_hitters import build_cms_blocks_df
+        from probabilistic_rs_spark.operators.windowed_bloom import (
+            build_windowed_bloom_blocks_df,
+        )
+
+        orders = spark.read.parquet(f"{SF}/orders.parquet")
+        for blocks in (
+            build_windowed_bloom_blocks_df(
+                orders, "o_orderpriority", "o_custkey", capacity_per_level=1000
+            ),
+            build_cms_blocks_df(orders, "o_custkey", eps=0.01, delta=0.01),
+        ):
+            plan = _executed(blocks)
+            assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+            assert plan.count("FlatMapGroupsInArrow") == 1, plan
             assert "FlatMapGroupsInPandas" not in plan, plan

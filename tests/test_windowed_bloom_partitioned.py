@@ -8,7 +8,12 @@
 * per-level AND / cross-level OR semantics, level expiry via num_levels;
 * mixed-geometry and wrong-engine inputs fail loudly;
 * the probe plan needs no broadcast: with broadcast joins disabled it is
-  still cartesian-free (shuffle equi-joins only).
+  still cartesian-free (shuffle equi-joins only);
+* a null level is a level of its own (as in Spark's ``groupBy``) whose
+  blocks equal those of the same items under a non-null level; a nested
+  level type fails on the driver;
+* flushing the partial stage at any byte bound leaves the blocks
+  bit-identical.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators import sketch_agg
 from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
 from probabilistic_rs_spark.operators.windowed_bloom import (
     build_windowed_bloom_blocks_df,
@@ -227,3 +233,82 @@ class TestPartitionedProbe:
                 conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
             else:
                 conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
+
+
+def _direct_build(df):
+    return build_windowed_bloom_blocks_df(
+        df, "level", "user", capacity_per_level=CAP, target_fpr=FPR, words_per_block=64
+    )
+
+
+def _block_rows(blocks):
+    return sorted((r["block"], tuple(r["words"])) for r in blocks.collect())
+
+
+def _leveled(ids, level_type: str, level_sql: str):
+    return ids.select(
+        F.expr(f"CAST({level_sql} AS {level_type})").alias("level"),
+        F.concat(F.lit("u"), F.col("id")).alias("user"),
+    )
+
+
+@pytest.mark.parametrize("layout", ["mixed", "all-null"])
+@pytest.mark.parametrize(
+    "level_type, value",
+    [("long", "7"), ("string", "'w7'"), ("date", "DATE'2024-01-07'")],
+)
+def test_null_level_is_a_level_of_its_own(spark, level_type, value, layout):
+    # even ids carry a null level, odd ids the non-null one
+    if layout == "mixed":
+        ev = _leveled(
+            spark.range(0, 400, numPartitions=1),
+            level_type,
+            f"IF(id % 2 = 0, NULL, {value})",
+        )
+    else:
+        ev = _leveled(spark.range(0, 400, 2, numPartitions=2), level_type, "NULL").union(
+            _leveled(spark.range(1, 400, 2, numPartitions=1), level_type, value)
+        )
+    blocks = _direct_build(ev).cache()
+    try:
+        levels = {r["level"] for r in blocks.select("level").distinct().collect()}
+        assert None in levels and len(levels) == 2
+        # positions do not depend on the level: the null level's blocks are
+        # those of the same items under a non-null level
+        same_items = _leveled(spark.range(0, 400, 2), level_type, value)
+        assert _block_rows(blocks.where(F.col("level").isNull())) == _block_rows(
+            _direct_build(same_items)
+        )
+        probed = windowed_bloom_partitioned_probe(same_items.select("user"), "user", blocks)
+        assert probed.where(~F.col("is_member")).count() == 0
+    finally:
+        blocks.unpersist()
+
+
+def test_struct_level_fails_on_driver(spark):
+    ev = _events(spark).select(F.struct("bucket").alias("level"), "user")
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+    with pytest.raises(SketchConfigError, match="nested"):
+        _direct_build(ev)
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == last_job
+
+
+def test_flush_bound_keeps_blocks_bit_identical(
+    spark, built, monkeypatch, map_in_arrow_rows, small_arrow_batches
+):
+    ev = built[0].withColumnRenamed("bucket", "level")
+
+    def build():
+        blocks = _direct_build(ev)
+        rows = sorted(
+            (r["level"], r["block"], tuple(r["words"])) for r in blocks.collect()
+        )
+        return rows, map_in_arrow_rows(blocks)
+
+    whole, whole_partials = build()
+    monkeypatch.setattr(sketch_agg, "PACKED_FLUSH_BYTES", 256)
+    flushed, flushed_partials = build()
+    assert flushed == whole
+    # each partition flushed many times: more partial rows, same blocks
+    assert flushed_partials > whole_partials
