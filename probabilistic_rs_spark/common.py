@@ -168,38 +168,6 @@ def op_masks(ops):
     return is_ins, is_del
 
 
-def check_shard_modulus(state_pdf, ns: int) -> None:
-    """Task-side shard-modulus conflict check for the cogrouped
-    membership kernels (cuckoo/quotient probe, delete, and ops folds):
-    every shard row carries the ``n_shards`` it was built with, and
-    routing with any other modulus silently yields false negatives — so
-    a mismatch raises from INSIDE the cogroup. Round 6: closes the
-    explicit-parameter cousin of the r5 ops-fold trap without a
-    driver-side verification scan (probe/delete inputs are often
-    unpersisted build plans an eager agg would re-execute)."""
-    if "n_shards" in state_pdf.columns and not state_pdf.empty:
-        built = int(state_pdf["n_shards"].iloc[0])
-        if built != int(ns):
-            from probabilistic_rs_spark.errors import SketchConfigError
-
-            raise SketchConfigError(
-                f"n_shards={int(ns)} conflicts with the states' n_shards "
-                f"column ({built}) — omit the parameter (the states are "
-                "self-describing) or pass the matching value"
-            )
-
-
-def shard_cogroup_cols(states_df) -> list[str]:
-    """The columns a shard-state table contributes to a cogroup:
-    ``n_shards`` rides along when present so ``check_shard_modulus`` can
-    verify routing inside the task."""
-    return (
-        ["shard", "state", "n_shards"]
-        if "n_shards" in states_df.columns
-        else ["shard", "state"]
-    )
-
-
 def bits2hr(n_bits: int) -> str:
     b = n_bits / 8.0
     if b < _KB:

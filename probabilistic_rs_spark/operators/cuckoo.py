@@ -8,9 +8,9 @@ the reference ships Bloom first and lists cuckoo as planned,
 * **shard-parallel build**: keys are hashed JVM-side (xxhash64), routed
   to ``n_shards`` shards by ``pmod(hash, n_shards)``; each shard's
   (distinct, sorted) hashes build an independent CuckooFilter inside one
-  ``applyInPandas`` task. Deterministic: shard membership and insert
-  order are pure functions of the key hash — the same table bytes come
-  out under any partitioning.
+  Arrow group-map task (``operators/shards.py``). Deterministic: shard
+  membership and insert order are pure functions of the key hash — the
+  same table bytes come out under any partitioning.
 * **probe / delete routing**: the shard id is recomputed from the same
   hash. Two physical layouts share one logical filter:
   **broadcast** (``build_cuckoo_shards`` → ``cuckoo_probe`` /
@@ -31,42 +31,32 @@ of exactly one shard are examined — sharding does not change the bound).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import (
-    check_shard_modulus as _check_shard_modulus,
-    lru_evict,
-    op_masks as _op_masks,
-    shard_cogroup_cols as _shard_cogroup_cols,
-)
+from probabilistic_rs_spark.common import lru_evict
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.shards import (
+    ShardFamily,
+    apply_ops_shards,
+    build_shards,
+    delete_shards,
+    fold_n_shards,
+    probe_shards,
+    resolve_n_shards,
+)
 from probabilistic_rs_spark.sketches.base import TYPE_CUCKOO, TYPE_NCUCKOO, peek_type
 from probabilistic_rs_spark.sketches.cuckoo import CuckooFilter, NativeCuckooFilter
 from probabilistic_rs_spark.sketches.quotient import DEFAULT_MAX_STATE_BYTES
 
-_SHARD_SCHEMA = StructType(
-    [
-        StructField("shard", IntegerType(), False),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-    ]
-)
 
-
-def _hashed(df: DataFrame, item_col: str, n_shards: int) -> DataFrame:
-    h = F.xxhash64(F.col(item_col).cast("string"))
-    return df.select(h.alias("__h"), F.pmod(h, F.lit(n_shards)).cast("int").alias("__shard"))
+def _pmod_route(h, ns: int):
+    return F.pmod(h, F.lit(ns)).cast("int")
 
 
 def _filter_from_bytes(blob: bytes):
@@ -102,34 +92,23 @@ def _shard_geometry(
     return per_shard_cap, n_shards * m * bucket_size * 4
 
 
-def _shard_states_df(
-    df: DataFrame,
-    item_col: str,
-    per_shard_cap: int,
-    n_shards: int,
-    fingerprint_bits: int,
-    bucket_size: int,
-    native: bool,
-) -> DataFrame:
-    """The shard-parallel build as a DataFrame of (shard, state, n_items)
-    rows — the common core of the broadcast and partitioned families.
-    Shards that received no keys have no row."""
-    fb, bs, ns = int(fingerprint_bits), int(bucket_size), int(n_shards)
+_FAMILY = ShardFamily(
+    route=_pmod_route,
+    load=_filter_from_bytes,
+    add=lambda cf, h: cf.insert_hashes(np.unique(h)),
+    remove=lambda cf, h: cf.delete_hashes(h),
+)
+
+
+def _creating_family(
+    per_shard_cap: int, fingerprint_bits: int, bucket_size: int, native: bool
+) -> ShardFamily:
     cls = NativeCuckooFilter if native else CuckooFilter
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["__shard"].iloc[0])
-        hashes = np.unique(pdf["__h"].to_numpy(dtype="int64").view(np.uint64))
-        cf = cls(per_shard_cap, fingerprint_bits=fb, bucket_size=bs)
-        cf.insert_hashes(hashes)
-        return pd.DataFrame(
-            {"shard": [shard], "state": [cf.to_bytes()], "n_items": [len(hashes)]}
+    return _FAMILY._replace(
+        new=partial(
+            cls, per_shard_cap, fingerprint_bits=int(fingerprint_bits),
+            bucket_size=int(bucket_size),
         )
-
-    return (
-        _hashed(df, item_col, ns)
-        .groupBy("__shard")
-        .applyInPandas(build, _SHARD_SCHEMA)
     )
 
 
@@ -172,16 +151,12 @@ def build_cuckoo_shards(
             "cuckoo_partitioned_probe (states stay distributed, probes "
             "shuffle to their shard) or raise max_state_bytes explicitly"
         )
-    fb, bs, ns = int(fingerprint_bits), int(bucket_size), int(n_shards)
-    cls = NativeCuckooFilter if native else CuckooFilter
-    rows = _shard_states_df(
-        df, item_col, per_shard_cap, ns, fb, bs, native
-    ).collect()
-    states: list[bytes] = [b""] * ns
-    for r in rows:
+    ns = int(n_shards)
+    family = _creating_family(per_shard_cap, fingerprint_bits, bucket_size, native)
+    states = [family.new().to_bytes()] * ns
+    for r in build_shards(df, item_col, ns, family).select("shard", "state").collect():
         states[int(r["shard"])] = bytes(r["state"])
-    empty = cls(per_shard_cap, fingerprint_bits=fb, bucket_size=bs).to_bytes()
-    return [s if s else empty for s in states]
+    return states
 
 
 def build_cuckoo_shards_df(
@@ -193,9 +168,9 @@ def build_cuckoo_shards_df(
     bucket_size: int = 4,
     native: bool = False,
 ) -> DataFrame:
-    """The NON-BROADCAST build (VERDICT r4 #1): returns the shard states
-    as a DataFrame ``(shard int, state binary, n_items long, n_shards
-    int)`` instead of collecting them to the driver — no byte budget
+    """The NON-BROADCAST build: returns the shard states as a DataFrame
+    ``(shard int, state binary, n_items long, n_shards int)`` instead of
+    collecting them to the driver — no byte budget
     applies because no single process ever holds more than one shard.
     This is the 100 TB degradation path: 10⁹–10¹⁰ keys at 24-bit
     fingerprints build into a distributed state table (persist or write
@@ -211,42 +186,8 @@ def build_cuckoo_shards_df(
     if n_shards <= 0:
         raise SketchConfigError("n_shards must be positive")
     per_shard_cap, _ = _shard_geometry(capacity, n_shards, fingerprint_bits, bucket_size)
-    out = _shard_states_df(
-        df, item_col, per_shard_cap, int(n_shards), int(fingerprint_bits),
-        int(bucket_size), native,
-    )
-    # self-describing routing: the probe/delete side re-derives shard ids
-    # with pmod(xxhash64(item), n_shards), so the modulus travels with the
-    # states instead of being a caller-remembered constant
-    return out.withColumn("n_shards", F.lit(int(n_shards)))
-
-
-def _states_df_n_shards(states_df: DataFrame, n_shards: int | None) -> int:
-    """The routing modulus for a shard-state table. When the caller
-    omits ``n_shards`` the self-describing column is read (one tiny
-    agg); an explicitly passed value short-circuits WITHOUT a scan (the
-    probe/delete inputs are often unpersisted build plans — an eager
-    verification agg would re-execute them), and is instead verified
-    INSIDE the cogrouped kernel against each shard row's ``n_shards``
-    value (``_check_shard_modulus``) — zero extra jobs, still a loud
-    failure instead of silent misrouting."""
-    if n_shards is not None:
-        return int(n_shards)
-    if "n_shards" not in states_df.columns:
-        raise SketchConfigError(
-            "states_df carries no n_shards column — pass n_shards explicitly"
-        )
-    row = states_df.select(F.max("n_shards").alias("ns"), F.min("n_shards").alias("lo")).head()
-    if row is None or row["ns"] is None:
-        raise SketchConfigError("empty states_df: build produced no shards")
-    if int(row["ns"]) != int(row["lo"]):
-        raise SketchConfigError(
-            f"states_df mixes shard moduli ({row['lo']} vs {row['ns']}) — "
-            "probe one build's states at a time"
-        )
-    return int(row["ns"])
-
-
+    family = _creating_family(per_shard_cap, fingerprint_bits, bucket_size, native)
+    return build_shards(df, item_col, int(n_shards), family)
 
 
 def cuckoo_partitioned_probe(
@@ -258,9 +199,9 @@ def cuckoo_partitioned_probe(
 ) -> DataFrame:
     """Membership probe against a DISTRIBUTED shard-state table
     (:func:`build_cuckoo_shards_df`) — the non-broadcast fallback for
-    filters too large for :func:`cuckoo_probe`'s broadcast (VERDICT r4
-    #1). Probe rows shuffle by their shard id and are COGROUPED with
-    their shard's single state row, so each task deserializes exactly one
+    filters too large for :func:`cuckoo_probe`'s broadcast. Probe rows
+    shuffle by their shard id and are COGROUPED with their shard's
+    single state row, so each task deserializes exactly one
     shard and probes its slice vectorized; total memory per task is one
     shard table + one probe slice regardless of filter size. Verdicts are
     identical to the broadcast probe on the same states by construction
@@ -270,52 +211,12 @@ def cuckoo_partitioned_probe(
     Cost model vs :func:`cuckoo_probe`: one exchange of the probe side
     (8-byte hash + carried columns) instead of an all-executor broadcast
     of the whole filter — the right trade exactly when the filter is
-    big.
-
-    Why probe rows ride the cogroup INLINE rather than the
-    distinct-hash + verdict-rejoin shape the windowed-Bloom/CMS
-    partitioned probes use: one shard holds an item's ENTIRE verdict,
-    so a single full-width exchange finishes the job — a dedup pass
-    would add a distinct exchange plus a rejoin that re-shuffles the
-    full-width rows anyway whenever the verdict relation outgrows the
-    broadcast budget. The windowed/CMS probes have no such choice:
-    their k (resp. d) per-item tests land on DIFFERENT block rows and
-    must be regrouped, and once a regroup+rejoin is forced, keying it
-    on the verdict-defining hashes (fixed 8–16 B) beats keying it on
-    arbitrary-width item values."""
-    from pyspark.sql.types import BooleanType as _B
-
-    ns = _states_df_n_shards(states_df, n_shards)
-    probe_cols = list(probe_df.columns)
-    if out_col in probe_cols:
-        raise SketchConfigError(f"probe_df already has a column {out_col!r}")
-    probed = probe_df.withColumn(
-        "__h", F.xxhash64(F.col(item_col).cast("string"))
-    ).withColumn("__shard", F.pmod(F.col("__h"), F.lit(ns)).cast("int"))
-    out_schema = StructType(
-        list(probed.schema.fields)[: len(probe_cols)]
-        + [StructField(out_col, _B(), False)]
-    )
-
-    def probe_fn(state_pdf: pd.DataFrame, probe_pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_shard_modulus(state_pdf, ns)
-        if probe_pdf.empty:
-            return probe_pdf.reindex(columns=[f.name for f in out_schema.fields])
-        out = probe_pdf.drop(columns=["__h", "__shard"])
-        if state_pdf.empty:
-            out[out_col] = False
-            return out
-        cf = _filter_from_bytes(bytes(state_pdf["state"].iloc[0]))
-        h = probe_pdf["__h"].to_numpy(dtype="int64").view(np.uint64)
-        out[out_col] = cf.contains_hashes(h)
-        return out
-
-    return (
-        states_df.select(*_shard_cogroup_cols(states_df))
-        .groupby("shard")
-        .cogroup(probed.groupby("__shard"))
-        .applyInPandas(probe_fn, out_schema)
-    )
+    big. Probe rows ride the cogroup inline (see
+    :func:`~probabilistic_rs_spark.operators.shards.probe_shards` for
+    why), and every carried column comes back with its exact type and
+    value."""
+    ns = resolve_n_shards(states_df, n_shards)
+    return probe_shards(probe_df, item_col, states_df, ns, _FAMILY, out_col)
 
 
 def cuckoo_apply_ops_df(
@@ -368,71 +269,12 @@ def cuckoo_apply_ops_df(
     Rows whose ``op_col`` is anything other than exactly ``'insert'`` or
     ``'delete'`` (including null) raise ``SketchConfigError`` — a typo'd
     tag must not silently become a collision-hazard delete."""
-    if states_df is not None:
-        ns = _states_df_n_shards(states_df, None)
-        if n_shards is not None and int(n_shards) != ns:
-            raise SketchConfigError(
-                f"n_shards={int(n_shards)} conflicts with the states_df "
-                f"n_shards column ({ns}) — omit the parameter (the states "
-                "are self-describing) or pass the matching value"
-            )
-    else:
-        ns = 32 if n_shards is None else int(n_shards)
-        if ns <= 0:
-            raise SketchConfigError("n_shards must be positive")
+    ns = fold_n_shards(states_df, n_shards, 32)
+    if ns <= 0:
+        raise SketchConfigError("n_shards must be positive")
     per_shard_cap, _ = _shard_geometry(capacity, ns, fingerprint_bits, bucket_size)
-    fb, bs = int(fingerprint_bits), int(bucket_size)
-    cls = NativeCuckooFilter if native else CuckooFilter
-    spark = ops_df.sparkSession
-    if states_df is None:
-        states_df = spark.createDataFrame([], _SHARD_SCHEMA)
-    h = F.xxhash64(F.col(item_col).cast("string"))
-    ops = ops_df.select(
-        h.alias("__h"),
-        F.pmod(h, F.lit(ns)).cast("int").alias("__shard"),
-        F.col(op_col).alias("__op"),
-    )
-
-    def apply_ops(state_pdf: pd.DataFrame, ops_pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_shard_modulus(state_pdf, ns)
-        if state_pdf.empty and ops_pdf.empty:
-            return pd.DataFrame(
-                {
-                    "shard": pd.Series([], dtype="int32"),
-                    "state": pd.Series([], dtype=object),
-                    "n_items": pd.Series([], dtype="int64"),
-                }
-            )
-        if state_pdf.empty:
-            shard = int(ops_pdf["__shard"].iloc[0])
-            cf = cls(per_shard_cap, fingerprint_bits=fb, bucket_size=bs)
-        else:
-            shard = int(state_pdf["shard"].iloc[0])
-            cf = _filter_from_bytes(bytes(state_pdf["state"].iloc[0]))
-        if not ops_pdf.empty:
-            hs = ops_pdf["__h"].to_numpy(dtype="int64").view(np.uint64)
-            is_ins, is_del = _op_masks(ops_pdf["__op"])
-            ins = np.unique(hs[is_ins])
-            if len(ins):
-                # cross-generation idempotency: drop hashes whose
-                # fingerprint the shard already holds (see docstring)
-                ins = ins[~cf.contains_hashes(ins)]
-            dels = np.unique(hs[is_del])
-            if len(ins):
-                cf.insert_hashes(ins)
-            if len(dels):
-                cf.delete_hashes(dels)
-        return pd.DataFrame(
-            {"shard": [shard], "state": [cf.to_bytes()], "n_items": [int(cf.n_items)]}
-        )
-
-    out = (
-        states_df.select(*_shard_cogroup_cols(states_df))
-        .groupby("shard")
-        .cogroup(ops.groupby("__shard"))
-        .applyInPandas(apply_ops, _SHARD_SCHEMA)
-    )
-    return out.withColumn("n_shards", F.lit(ns))
+    family = _creating_family(per_shard_cap, fingerprint_bits, bucket_size, native)
+    return apply_ops_shards(states_df, ops_df, item_col, op_col, ns, family)
 
 
 def cuckoo_delete_df(
@@ -450,44 +292,8 @@ def cuckoo_delete_df(
     were never inserted). Aggregate ``n_removed`` for the removal count,
     and persist/write the result before probing it twice (it is a lazy
     plan like any other)."""
-    ns = _states_df_n_shards(states_df, n_shards)
-    deletes = _hashed(delete_df, item_col, ns)
-    out_schema = StructType(
-        [
-            StructField("shard", IntegerType(), False),
-            StructField("state", BinaryType(), False),
-            StructField("n_removed", LongType(), False),
-        ]
-    )
-
-    def apply_deletes(state_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_shard_modulus(state_pdf, ns)
-        if state_pdf.empty:
-            # keys routed to a shard that never existed: nothing to delete
-            return pd.DataFrame(
-                {
-                    "shard": pd.Series([], dtype="int32"),
-                    "state": pd.Series([], dtype=object),
-                    "n_removed": pd.Series([], dtype="int64"),
-                }
-            )
-        shard = int(state_pdf["shard"].iloc[0])
-        cf = _filter_from_bytes(bytes(state_pdf["state"].iloc[0]))
-        removed = 0
-        if not del_pdf.empty:
-            hs = np.unique(del_pdf["__h"].to_numpy(dtype="int64").view(np.uint64))
-            removed = cf.delete_hashes(hs)
-        return pd.DataFrame(
-            {"shard": [shard], "state": [cf.to_bytes()], "n_removed": [removed]}
-        )
-
-    new_states = (
-        states_df.select(*_shard_cogroup_cols(states_df))
-        .groupby("shard")
-        .cogroup(deletes.groupby("__shard"))
-        .applyInPandas(apply_deletes, out_schema)
-    )
-    return new_states.withColumn("n_shards", F.lit(ns))
+    ns = resolve_n_shards(states_df, n_shards)
+    return delete_shards(states_df, delete_df, item_col, ns, _FAMILY)
 
 
 # executor-side cache of deserialized shard lists, keyed by a content
@@ -558,69 +364,33 @@ def cuckoo_probe(
     )
 
 
-_DELETE_SCHEMA = StructType(
-    [
-        StructField("shard", IntegerType(), False),
-        StructField("state", BinaryType(), False),
-        StructField("n_removed", LongType(), False),
-    ]
-)
-
-
 def cuckoo_delete(
     shard_states: list[bytes],
     delete_df: DataFrame,
     item_col: str,
 ) -> tuple[list[bytes], int]:
     """Delete a key set from the sharded filter — the operation Bloom
-    cannot do. Shard-parallel (VERDICT r2 fix): the delete keys are
-    COGROUPED with their shard's state executor-side, so each shard
-    deletes its own slice inside one ``applyInPandas`` task and emits the
-    new state bytes; raw delete hashes never travel to the driver. A
-    10⁸-key retraction feed (GDPR purge, revoked-domain list) shuffles
+    cannot do. Shard-parallel: the delete keys are COGROUPED with their
+    shard's state executor-side, so each shard deletes its own slice
+    inside one Arrow cogroup task (the same fold as
+    :func:`cuckoo_delete_df`) and emits the new state bytes; raw delete
+    hashes never travel to the driver. A 10⁸-key retraction feed (GDPR purge, revoked-domain list) shuffles
     only ``8·n_keys`` bytes between executors, and the driver collects
     exactly the ``n_shards`` state blobs it already holds.
 
     Per-shard delete order is ``np.unique``-sorted — deterministic under
     any partitioning. Returns (new shard states, n_removed)."""
     ns = len(shard_states)
-    spark = delete_df.sparkSession
-    states_df = spark.createDataFrame(
+    states_df = delete_df.sparkSession.createDataFrame(
         [(i, bytearray(s)) for i, s in enumerate(shard_states)],
         "shard int, state binary",
     )
-    deletes = _hashed(delete_df, item_col, ns)
-
-    def apply_deletes(state_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if state_pdf.empty:
-            # delete keys routed to a shard id with no state row: only
-            # possible if the caller passed a wrong-length state list
-            raise SketchConfigError(
-                "delete keys hashed to a shard with no state — "
-                "shard_states length must match the build's n_shards"
-            )
-        shard = int(state_pdf["shard"].iloc[0])
-        cf = _filter_from_bytes(bytes(state_pdf["state"].iloc[0]))
-        removed = 0
-        if not del_pdf.empty:
-            hs = np.unique(del_pdf["__h"].to_numpy(dtype="int64").view(np.uint64))
-            removed = cf.delete_hashes(hs)
-        return pd.DataFrame(
-            {"shard": [shard], "state": [cf.to_bytes()], "n_removed": [removed]}
-        )
-
-    rows = (
-        states_df.groupby("shard")
-        .cogroup(deletes.groupby("__shard"))
-        .applyInPandas(apply_deletes, _DELETE_SCHEMA)
-        .collect()
-    )
     new_states: list[bytes] = [b""] * ns
     removed = 0
-    for r in rows:
+    for r in delete_shards(states_df, delete_df, item_col, ns, _FAMILY).collect():
         new_states[int(r["shard"])] = bytes(r["state"])
         removed += int(r["n_removed"])
-    # shards the cogroup never saw (impossible: every state row appears)
+    # every shard id has a state row, so each comes back exactly once
     assert all(new_states), "cogroup dropped a shard state"
     return new_states, removed
 
@@ -673,7 +443,7 @@ def _native_cuckoo_member_expr(item_col: str, tables, ns: int, m: int, fb: int, 
     equality tests, all in whole-stage codegen. Exactly the expressions
     whose numpy mirror built the table → zero false negatives."""
     h = F.xxhash64(F.col(item_col).cast("string"))
-    shard = F.pmod(h, F.lit(int(ns))).cast("int")
+    shard = _pmod_route(h, int(ns))
     g = F.xxhash64(h)
     fp = F.call_function("shiftrightunsigned", g, F.lit(64 - fb))
     fp = F.when(fp == F.lit(0), F.lit(1)).otherwise(fp)

@@ -24,7 +24,7 @@ global share implies a matching local share in some partition.
 Also provided: ``exact_group_count`` (plain built-in — already skew-safe
 for counts via Spark's map-side partial aggregation) and
 ``salted_apply_in_pandas_agg`` — the salted two-stage pattern where it is
-genuinely load-bearing: custom ``applyInPandas`` states have no partial
+genuinely load-bearing: a grouped-map UDF's custom state has no partial
 aggregation, so a hot key must be split across reducers by salt.
 """
 
@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.sketch_agg import grouped_fold
 from probabilistic_rs_spark.sketches.cms import CountMinSketch
 
 _PARTIAL_SCHEMA = StructType(
@@ -127,19 +128,23 @@ class BoundedCandidateTracker:
         ]
 
 
-def _merge_partials(pdf: pd.DataFrame) -> tuple[CountMinSketch, dict]:
+def _merge_partials(tbl) -> tuple[CountMinSketch, dict]:
     """Fold ``cms_heavy_hitters`` partial rows: the CMS matrices added in
     partition-id order, and the candidate union as hash -> key (the
     first key seen for a hash wins)."""
-    pdf = pdf.sort_values("__pid", kind="stable")
-    blobs = pdf["cms_state"]
-    cms = CountMinSketch.from_bytes(blobs.iloc[0])
-    for b in blobs.iloc[1:]:
+    import pyarrow.compute as pc
+
+    tbl = tbl.take(pc.sort_indices(tbl.column("__pid")))
+    blobs = tbl.column("cms_state").to_pylist()
+    cms = CountMinSketch.from_bytes(blobs[0])
+    for b in blobs[1:]:
         cms.merge_bytes(b)
     key_by_hash: dict = {}
-    for keys, hashes in zip(pdf["cand_keys"], pdf["cand_hashes"]):
+    for keys, hashes in zip(
+        tbl.column("cand_keys").to_pylist(), tbl.column("cand_hashes").to_pylist()
+    ):
         for k, h in zip(keys, hashes):
-            key_by_hash.setdefault(int(h), k)
+            key_by_hash.setdefault(h, k)
     return cms, key_by_hash
 
 
@@ -209,44 +214,46 @@ def cms_heavy_hitters(
 
     partials = projected.mapInArrow(build, _PARTIAL_SCHEMA)
 
-    def premerge(pdf: pd.DataFrame) -> pd.DataFrame:
+    final_schema = to_arrow_schema(_FINAL_SCHEMA)
+
+    def premerge(tbl: "pa.Table") -> "pa.Table":
         """Bucket-level partial merge. Output shape identical to a single
         partial row."""
-        cms, key_by_hash = _merge_partials(pdf)
-        hs = sorted(key_by_hash.keys())
-        return pd.DataFrame(
-            {
-                "__pid": [int(pdf["__pid"].min())],
-                "cms_state": [cms.to_bytes()],
-                "cand_keys": [[key_by_hash[h] for h in hs]],
-                "cand_hashes": [hs],
-                "n_updates": [int(pdf["n_updates"].sum())],
-            }
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cms, key_by_hash = _merge_partials(tbl)
+        hs = sorted(key_by_hash)
+        return pa.Table.from_arrays(
+            [
+                pa.array([pc.min(tbl.column("__pid")).as_py()], type=pa.int32()),
+                pa.array([cms.to_bytes()], type=pa.binary()),
+                pa.array([[key_by_hash[h] for h in hs]], type=pa.list_(pa.string())),
+                pa.array([hs], type=pa.list_(pa.int64())),
+                pa.array([pc.sum(tbl.column("n_updates")).as_py()], type=pa.int64()),
+            ],
+            schema=arrow_schema,
         )
 
     if tree_fanin and tree_fanin > 1:
-        partials = (
-            partials.withColumn("__bucket", F.pmod(F.col("__pid"), F.lit(tree_fanin)))
-            .groupBy("__bucket")
-            .applyInPandas(premerge, _PARTIAL_SCHEMA)
+        bucketed = partials.withColumn("__bucket", F.pmod(F.col("__pid"), F.lit(tree_fanin)))
+        partials = grouped_fold(bucketed, ["__bucket"], premerge, _PARTIAL_SCHEMA)
+
+    def finish(tbl: "pa.Table") -> "pa.Table":
+        import pyarrow as pa
+
+        cms, key_by_hash = _merge_partials(tbl)
+        hs = np.array(sorted(key_by_hash), dtype=np.int64)
+        ests = cms.estimate_hashes(hs.view(np.uint64))
+        return pa.Table.from_arrays(
+            [
+                pa.array([key_by_hash[h] for h in hs.tolist()], type=pa.string()),
+                pa.array(ests.astype(np.int64), type=pa.int64()),
+            ],
+            schema=final_schema,
         )
 
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        cms, key_by_hash = _merge_partials(pdf)
-        if not key_by_hash:
-            return pd.DataFrame({"key": [], "est_count": []})
-        hs = np.array(sorted(key_by_hash.keys()), dtype=np.int64).view(np.uint64)
-        ests = cms.estimate_hashes(hs)
-        return pd.DataFrame(
-            {
-                "key": [key_by_hash[int(h)] for h in hs.view(np.int64)],
-                "est_count": ests.astype(np.int64),
-            }
-        )
-
-    merged = (
-        partials.withColumn("__g", F.lit(1)).groupBy("__g").applyInPandas(finish, _FINAL_SCHEMA)
-    )
+    merged = grouped_fold(partials.withColumn("__g", F.lit(1)), ["__g"], finish, _FINAL_SCHEMA)
     out = merged
     if threshold is not None:
         out = out.where(F.col("est_count") >= threshold)
@@ -433,7 +440,7 @@ def salted_group_count(
     groupBy(key)`` adds a second shuffle that built-in counts never need
     (partial aggregation already bounds per-reducer input); salting is
     load-bearing only for aggregations with NO partial-agg support, i.e.
-    ``applyInPandas`` custom states — see :func:`salted_apply_in_pandas_agg`
+    grouped-map UDF custom states — see :func:`salted_apply_in_pandas_agg`
     for that pattern."""
     return exact_group_count(df, key_col)
 
@@ -445,7 +452,7 @@ def salted_apply_in_pandas_agg(
     n_salts: int = 16,
     salt_cols: list[str] | None = None,
 ) -> DataFrame:
-    """The salted pattern where it IS load-bearing: ``applyInPandas`` has
+    """The salted pattern where it IS load-bearing: a grouped-map UDF has
     no map-side partial aggregation, so a hot key would funnel all its raw
     rows to one reducer task. Stage 1 groups by (key, salt) — a hot key's
     rows split across ``n_salts`` tasks, each folding its slice into a
@@ -469,13 +476,18 @@ def salted_apply_in_pandas_agg(
         ]
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "key": [pdf["key"].iloc[0]],
-                "total": [float(pdf["val"].sum())],
-                "cnt": [int(len(pdf))],
-            }
+    def fold(tbl: "pa.Table") -> "pa.Table":
+        import pyarrow as pa
+
+        # nulls arrive as NaN; nansum skips them and NaN values alike
+        total = float(np.nansum(tbl.column("val").to_numpy()))
+        return pa.Table.from_arrays(
+            [
+                tbl.column("key").slice(0, 1),
+                pa.array([total], type=pa.float64()),
+                pa.array([tbl.num_rows], type=pa.int64()),
+            ],
+            names=["key", "total", "cnt"],
         )
 
     # salt from STABLE row content (ADVICE r2): monotonically_increasing_id
@@ -492,7 +504,7 @@ def salted_apply_in_pandas_agg(
         F.col(value_col).cast("double").alias("val"),
         F.pmod(F.xxhash64(*salt_inputs), F.lit(n_salts)).alias("__salt"),
     )
-    stage1 = salted.groupBy("key", "__salt").applyInPandas(fold, out1)
+    stage1 = grouped_fold(salted, ["key", "__salt"], fold, out1)
     return stage1.groupBy("key").agg(
         F.sum("total").alias("total"), F.sum("cnt").cast("long").alias("cnt")
     )

@@ -27,6 +27,8 @@ Plan shapes:
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 
@@ -34,13 +36,17 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import (
-    check_shard_modulus as _check_shard_modulus,
-    op_masks as _op_masks,
-    shard_cogroup_cols as _shard_cogroup_cols,
-    state_key,
-)
+from probabilistic_rs_spark.common import state_key
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.shards import (
+    ShardFamily,
+    apply_ops_shards,
+    build_shards,
+    delete_shards,
+    fold_n_shards,
+    probe_shards,
+    resolve_n_shards,
+)
 from probabilistic_rs_spark.operators.sketch_agg import (
     SketchSpec,
     build_global_state,
@@ -223,41 +229,57 @@ def native_quotient_semi_filter(
 
 
 # ---------------------------------------------------------------------------
-# Partitioned (non-broadcast) family — round 5, the cuckoo-partitioned
-# idiom applied to the second O(n)-state structure. The quotient shard
-# function is special: shard id = the TOP shard_bits OF THE HASH, which
-# are also the top bits of the fingerprint — so each shard holds a
-# CONTIGUOUS range of the global sorted run, and folding the shard
-# states back together reproduces the global state BIT-IDENTICALLY
-# (disjoint sorted-run union; asserted in tests). The broadcast and
-# partitioned families are therefore two physical layouts of one
-# logical filter, not two filters.
+# Partitioned (non-broadcast) family: the shard-table engine of
+# ``operators/shards.py`` with prefix routing. Shard id = the TOP
+# shard_bits OF THE HASH, which are also the top bits of the fingerprint
+# (fp = top p bits of h, so ``fp >> (p - s) == h >> (64 - s)``, computable
+# without knowing p) — so each shard holds a CONTIGUOUS range of the
+# global sorted run, and folding the shard states back together
+# reproduces the global state BIT-IDENTICALLY (disjoint sorted-run union;
+# asserted in tests). The broadcast and partitioned families are
+# therefore two physical layouts of one logical filter, not two filters.
 # ---------------------------------------------------------------------------
 
-from pyspark.sql.types import (  # noqa: E402
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
+
+def _prefix_route(h, ns: int):
+    return F.call_function(
+        "shiftrightunsigned", h, F.lit(64 - (ns.bit_length() - 1))
+    ).cast("int")
+
+
+_FAMILY = ShardFamily(
+    route=_prefix_route,
+    load=lambda blob: QuotientFilter.from_bytes(blob),
+    add=lambda sk, h: sk.update_hashes(h),
+    remove=lambda sk, h: sk.remove_all(np.unique(sk._fingerprints(h))),
 )
 
-_QSHARD_SCHEMA = StructType(
-    [
-        StructField("shard", IntegerType(), False),
-        StructField("state", BinaryType(), False),
-        StructField("n_items", LongType(), False),
-    ]
-)
+
+def _creating_family(capacity: int, false_positive_rate: float) -> ShardFamily:
+    # every shard uses the GLOBAL (capacity, fpr), so fingerprints match
+    # the broadcast family; the budget is a broadcast guard, a shard's
+    # state is a slice
+    return _FAMILY._replace(
+        new=partial(
+            QuotientFilter, int(capacity), float(false_positive_rate),
+            max_state_bytes=None,
+        )
+    )
 
 
-def _qhashed(df: DataFrame, item_col: str, shard_bits: int) -> DataFrame:
-    """(__h, __shard): shard id = top ``shard_bits`` of the hash — the
-    fingerprint's own prefix (fp = top p bits of h, so
-    ``fp >> (p - s) == h >> (64 - s)``), computable without knowing p."""
-    h = F.xxhash64(F.col(item_col).cast("string"))
-    shard = F.call_function("shiftrightunsigned", h, F.lit(64 - shard_bits)).cast("int")
-    return df.select(h.alias("__h"), shard.alias("__shard"))
+def _shard_count(shard_bits: int) -> int:
+    if not (1 <= int(shard_bits) <= 20):
+        raise SketchConfigError("shard_bits must be in 1..=20")
+    return 1 << int(shard_bits)
+
+
+def _check_pow2(ns: int) -> int:
+    # the prefix route shifts by 64 - log2(ns): one shard would shift by 64
+    if ns < 2 or ns & (ns - 1):
+        raise SketchConfigError(
+            f"quotient n_shards must be a power of two >= 2, got {ns}"
+        )
+    return ns
 
 
 def build_quotient_shards_df(
@@ -281,56 +303,8 @@ def build_quotient_shards_df(
     Pick ``shard_bits`` so one shard's run (~``fp_bytes · n /
     2^shard_bits``) fits executor memory; shards also parallelize the
     sort/consolidate work."""
-    if not (1 <= int(shard_bits) <= 20):
-        raise SketchConfigError("shard_bits must be in 1..=20")
-    s = int(shard_bits)
-    cap, fpr = int(capacity), float(false_positive_rate)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["__shard"].iloc[0])
-        # the budget is a broadcast guard; a shard's state is a slice
-        sk = QuotientFilter(cap, fpr, max_state_bytes=None)
-        sk.update_hashes(pdf["__h"].to_numpy(dtype="int64").view(np.uint64))
-        return pd.DataFrame(
-            {"shard": [shard], "state": [sk.to_bytes()], "n_items": [sk.n_items]}
-        )
-
-    out = (
-        _qhashed(df, item_col, s)
-        .groupBy("__shard")
-        .applyInPandas(build, _QSHARD_SCHEMA)
-    )
-    return out.withColumn("n_shards", F.lit(1 << s))
-
-
-def _qstates_shard_bits(states_df: DataFrame, n_shards: int | None) -> int:
-    """Prefix width for a quotient shard table. When the caller omits
-    ``n_shards`` the self-describing column is read (one tiny agg); an
-    explicitly passed value short-circuits WITHOUT a scan (probe/delete
-    inputs are often unpersisted build plans an eager verification agg
-    would re-execute) and is instead verified INSIDE the cogrouped
-    kernel against each shard row's ``n_shards`` value
-    (``common.check_shard_modulus``) — zero extra jobs, still a loud
-    failure instead of silent misrouting."""
-    if n_shards is None:
-        if "n_shards" not in states_df.columns:
-            raise SketchConfigError(
-                "states_df carries no n_shards column — pass n_shards explicitly"
-            )
-        row = states_df.select(
-            F.max("n_shards").alias("hi"), F.min("n_shards").alias("lo")
-        ).head()
-        if row is None or row["hi"] is None:
-            raise SketchConfigError("empty states_df: build produced no shards")
-        if int(row["hi"]) != int(row["lo"]):
-            raise SketchConfigError(
-                f"states_df mixes shard moduli ({row['lo']} vs {row['hi']})"
-            )
-        n_shards = int(row["hi"])
-    s = int(n_shards).bit_length() - 1
-    if (1 << s) != int(n_shards):
-        raise SketchConfigError(f"quotient n_shards must be a power of two, got {n_shards}")
-    return s
+    family = _creating_family(capacity, false_positive_rate)
+    return build_shards(df, item_col, _shard_count(shard_bits), family)
 
 
 def quotient_partitioned_probe(
@@ -349,44 +323,11 @@ def quotient_partitioned_probe(
     shard with no state row (no keys at build) are not members.
 
     Probe rows ride the cogroup inline — one full-width exchange — for
-    the same reason :func:`~probabilistic_rs_spark.operators.cuckoo.
-    cuckoo_partitioned_probe` does (see its docstring): one shard holds
-    an item's entire verdict, so no regroup/rejoin stage exists to
-    optimize, unlike the windowed-Bloom/CMS block probes."""
-    s = _qstates_shard_bits(states_df, n_shards)
-    probe_cols = list(probe_df.columns)
-    if out_col in probe_cols:
-        raise SketchConfigError(f"probe_df already has a column {out_col!r}")
-    probed = probe_df.withColumn(
-        "__h", F.xxhash64(F.col(item_col).cast("string"))
-    ).withColumn(
-        "__shard",
-        F.call_function("shiftrightunsigned", F.col("__h"), F.lit(64 - s)).cast("int"),
-    )
-    out_schema = StructType(
-        list(probed.schema.fields)[: len(probe_cols)]
-        + [StructField(out_col, BooleanType(), False)]
-    )
-
-    def probe_fn(state_pdf: pd.DataFrame, probe_pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_shard_modulus(state_pdf, 1 << s)
-        if probe_pdf.empty:
-            return probe_pdf.reindex(columns=[f.name for f in out_schema.fields])
-        out = probe_pdf.drop(columns=["__h", "__shard"])
-        if state_pdf.empty:
-            out[out_col] = False
-            return out
-        sk = QuotientFilter.from_bytes(bytes(state_pdf["state"].iloc[0]))
-        h = probe_pdf["__h"].to_numpy(dtype="int64").view(np.uint64)
-        out[out_col] = sk.contains_hashes(h)
-        return out
-
-    return (
-        states_df.select(*_shard_cogroup_cols(states_df))
-        .groupby("shard")
-        .cogroup(probed.groupby("__shard"))
-        .applyInPandas(probe_fn, out_schema)
-    )
+    the reason :func:`~probabilistic_rs_spark.operators.shards.
+    probe_shards` gives, and every carried column comes back with its
+    exact type and value."""
+    ns = _check_pow2(resolve_n_shards(states_df, n_shards))
+    return probe_shards(probe_df, item_col, states_df, ns, _FAMILY, out_col)
 
 
 def quotient_delete_df(
@@ -403,44 +344,8 @@ def quotient_delete_df(
     n_shards)``; aggregate ``n_removed`` for the occurrence count.
     Deleting a never-inserted key is a no-op except for the ≤FPR
     fingerprint-collision hazard shared by every deletable filter."""
-    s = _qstates_shard_bits(states_df, n_shards)
-    deletes = _qhashed(delete_df, item_col, s)
-    out_schema = StructType(
-        [
-            StructField("shard", IntegerType(), False),
-            StructField("state", BinaryType(), False),
-            StructField("n_removed", LongType(), False),
-        ]
-    )
-
-    def apply_deletes(state_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_shard_modulus(state_pdf, 1 << s)
-        if state_pdf.empty:
-            return pd.DataFrame(
-                {
-                    "shard": pd.Series([], dtype="int32"),
-                    "state": pd.Series([], dtype=object),
-                    "n_removed": pd.Series([], dtype="int64"),
-                }
-            )
-        shard = int(state_pdf["shard"].iloc[0])
-        sk = QuotientFilter.from_bytes(bytes(state_pdf["state"].iloc[0]))
-        removed = 0
-        if not del_pdf.empty:
-            h = np.unique(del_pdf["__h"].to_numpy(dtype="int64").view(np.uint64))
-            fps = np.unique(sk._fingerprints(h))
-            removed = sk.remove_all(fps)
-        return pd.DataFrame(
-            {"shard": [shard], "state": [sk.to_bytes()], "n_removed": [removed]}
-        )
-
-    out = (
-        states_df.select(*_shard_cogroup_cols(states_df))
-        .groupby("shard")
-        .cogroup(deletes.groupby("__shard"))
-        .applyInPandas(apply_deletes, out_schema)
-    )
-    return out.withColumn("n_shards", F.lit(1 << s))
+    ns = _check_pow2(resolve_n_shards(states_df, n_shards))
+    return delete_shards(states_df, delete_df, item_col, ns, _FAMILY)
 
 
 def quotient_apply_ops_df(
@@ -473,69 +378,10 @@ def quotient_apply_ops_df(
     ops); only consulted as a geometry choice when starting from
     ``states_df=None`` (default 5). Op tags other than exactly
     ``'insert'``/``'delete'`` raise ``SketchConfigError``."""
-    if states_df is not None:
-        s = _qstates_shard_bits(states_df, None)
-        if shard_bits is not None and int(shard_bits) != s:
-            raise SketchConfigError(
-                f"shard_bits={int(shard_bits)} conflicts with the states_df "
-                f"n_shards column (2^{s} shards) — omit the parameter (the "
-                "states are self-describing) or pass the matching value"
-            )
-    else:
-        s = 5 if shard_bits is None else int(shard_bits)
-        if not (1 <= s <= 20):
-            raise SketchConfigError("shard_bits must be in 1..=20")
-    cap, fpr = int(capacity), float(false_positive_rate)
-    spark = ops_df.sparkSession
-    if states_df is None:
-        states_df = spark.createDataFrame([], _QSHARD_SCHEMA)
-    h = F.xxhash64(F.col(item_col).cast("string"))
-    ops = ops_df.select(
-        h.alias("__h"),
-        F.call_function("shiftrightunsigned", h, F.lit(64 - s)).cast("int").alias("__shard"),
-        F.col(op_col).alias("__op"),
-    )
-
-    def apply_ops(state_pdf: pd.DataFrame, ops_pdf: pd.DataFrame) -> pd.DataFrame:
-        _check_shard_modulus(state_pdf, 1 << s)
-        if state_pdf.empty and ops_pdf.empty:
-            return pd.DataFrame(
-                {
-                    "shard": pd.Series([], dtype="int32"),
-                    "state": pd.Series([], dtype=object),
-                    "n_items": pd.Series([], dtype="int64"),
-                }
-            )
-        if state_pdf.empty:
-            shard = int(ops_pdf["__shard"].iloc[0])
-            sk = QuotientFilter(cap, fpr, max_state_bytes=None)
-        else:
-            shard = int(state_pdf["shard"].iloc[0])
-            sk = QuotientFilter.from_bytes(bytes(state_pdf["state"].iloc[0]))
-        if not ops_pdf.empty:
-            hs = ops_pdf["__h"].to_numpy(dtype="int64").view(np.uint64)
-            is_ins, is_del = _op_masks(ops_pdf["__op"])
-            ins = np.unique(hs[is_ins])
-            if len(ins):
-                # cross-generation idempotency (matches the cuckoo fold):
-                # re-inserted keys don't grow the sorted run
-                ins = ins[~sk.contains_hashes(ins)]
-            dels = np.unique(hs[is_del])
-            if len(ins):
-                sk.update_hashes(ins)
-            if len(dels):
-                sk.remove_all(np.unique(sk._fingerprints(dels)))
-        return pd.DataFrame(
-            {"shard": [shard], "state": [sk.to_bytes()], "n_items": [int(sk.n_items)]}
-        )
-
-    out = (
-        states_df.select(*_shard_cogroup_cols(states_df))
-        .groupby("shard")
-        .cogroup(ops.groupby("__shard"))
-        .applyInPandas(apply_ops, _QSHARD_SCHEMA)
-    )
-    return out.withColumn("n_shards", F.lit(1 << s))
+    requested = None if shard_bits is None else _shard_count(shard_bits)
+    ns = _check_pow2(fold_n_shards(states_df, requested, 1 << 5))
+    family = _creating_family(capacity, false_positive_rate)
+    return apply_ops_shards(states_df, ops_df, item_col, op_col, ns, family)
 
 
 def quotient_delete(

@@ -31,7 +31,7 @@ Distributed mapping (see ``operators/cuckoo.py``): cuckoo insertion is a
 sequential displacement chain, so unlike Bloom there is NO associative
 state merge. The Spark build therefore shards by key hash — each shard
 builds its own filter over its (sorted, distinct) hashes inside one
-``applyInPandas`` task — and probes route by the same shard function.
+Arrow group-map task — and probes route by the same shard function.
 Shard builds are embarrassingly parallel and deterministic.
 """
 

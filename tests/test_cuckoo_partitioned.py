@@ -22,6 +22,10 @@ from probabilistic_rs_spark.operators.cuckoo import (
     cuckoo_partitioned_probe,
     cuckoo_probe,
 )
+from probabilistic_rs_spark.operators.quotient import (
+    build_quotient_shards_df,
+    quotient_partitioned_probe,
+)
 
 
 def _keys_df(spark, n, prefix="k"):
@@ -85,13 +89,30 @@ class TestPartitionedFamily:
         assert part == bcast
         assert all(part[f"k{i}"] for i in range(0, 20_000, 997))  # zero FN
 
-    def test_extra_probe_columns_pass_through(self, spark, built):
-        _, _, states_df = built
-        probes = _keys_df(spark, 100).withColumn("payload", F.length("key"))
-        out = cuckoo_partitioned_probe(probes, "key", states_df)
-        assert out.columns == ["key", "payload", "is_member"]
-        r = out.where(F.col("key") == "k7").head()
-        assert r["payload"] == 2 and bool(r["is_member"])
+    @pytest.mark.parametrize("family", ["cuckoo", "quotient"])
+    def test_extra_probe_columns_pass_through(self, spark, family):
+        # one cuckoo shard (two quotient prefix shards) holds every key, so
+        # nulls and longs above 2^53 share a cogroup: each carried column
+        # must come back exactly, not through a float64 widening
+        keys = _keys_df(spark, 100)
+        if family == "cuckoo":
+            states_df = build_cuckoo_shards_df(keys, "key", capacity=100, n_shards=1)
+            probe = cuckoo_partitioned_probe
+        else:
+            states_df = build_quotient_shards_df(keys, "key", capacity=100, shard_bits=1)
+            probe = quotient_partitioned_probe
+        big = F.lit(9007199254740993) + F.col("id")  # 2^53 + 1 + id
+        probes = spark.range(100).select(
+            F.concat(F.lit("k"), F.col("id")).alias("key"),
+            F.length(F.concat(F.lit("k"), F.col("id"))).alias("payload"),
+            F.when(F.col("id") % 3 == 0, None).otherwise(big).cast("bigint").alias("big"),
+        )
+        expected = {r["key"]: (r["payload"], r["big"]) for r in probes.collect()}
+        out = probe(probes, "key", states_df)
+        assert out.columns == ["key", "payload", "big", "is_member"]
+        rows = out.collect()
+        assert {r["key"]: (r["payload"], r["big"]) for r in rows} == expected
+        assert len(rows) == 100 and all(r["is_member"] for r in rows)
 
     def test_n_shards_mismatch_and_missing_column(self, spark, built):
         _, _, states_df = built
@@ -259,13 +280,21 @@ class TestFoldShardModulus:
         for df in (g1, g2, g3):
             df.unpersist()
 
-    def test_unknown_op_tag_raises(self, spark):
+    @pytest.mark.parametrize("family", ["cuckoo", "quotient"])
+    @pytest.mark.parametrize("tag", ["upsert", None])
+    def test_unknown_op_tag_raises(self, spark, family, tag):
         from probabilistic_rs_spark.operators.cuckoo import cuckoo_apply_ops_df
+        from probabilistic_rs_spark.operators.quotient import quotient_apply_ops_df
 
         bad = self._ops(spark, 0, 10, "insert").unionByName(
-            self._ops(spark, 10, 12, "upsert")
+            self._ops(spark, 10, 12, "insert").withColumn(
+                "op", F.lit(tag).cast("string")
+            )
         )
-        g = cuckoo_apply_ops_df(None, bad, "key", capacity=1000, n_shards=4)
+        if family == "cuckoo":
+            g = cuckoo_apply_ops_df(None, bad, "key", capacity=1000, n_shards=4)
+        else:
+            g = quotient_apply_ops_df(None, bad, "key", capacity=1000, shard_bits=2)
         with pytest.raises(Exception, match="op tags other than"):
             g.count()
 

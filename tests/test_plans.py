@@ -255,3 +255,60 @@ class TestMergeShape:
             assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
             assert plan.count("FlatMapGroupsInArrow") == 1, plan
             assert "FlatMapGroupsInPandas" not in plan, plan
+
+    def test_shard_families_are_one_arrow_group_map_or_cogroup(self, spark):
+        """Both fingerprint shard families build with one Arrow group map,
+        and probe, delete and fold ops with one Arrow cogroup each; no
+        pandas group map or cogroup is left."""
+        from probabilistic_rs_spark.operators.cuckoo import (
+            build_cuckoo_shards_df,
+            cuckoo_apply_ops_df,
+            cuckoo_delete_df,
+            cuckoo_partitioned_probe,
+        )
+        from probabilistic_rs_spark.operators.quotient import (
+            build_quotient_shards_df,
+            quotient_apply_ops_df,
+            quotient_delete_df,
+            quotient_partitioned_probe,
+        )
+
+        keys = spark.read.parquet(f"{SF}/orders.parquet").select(
+            F.col("o_orderkey").alias("key")
+        )
+        ops = keys.select(F.lit("insert").alias("op"), "key")
+        families = (
+            (
+                build_cuckoo_shards_df(keys, "key", capacity=10_000, n_shards=8),
+                cuckoo_partitioned_probe, cuckoo_delete_df, cuckoo_apply_ops_df,
+            ),
+            (
+                build_quotient_shards_df(keys, "key", capacity=10_000, shard_bits=3),
+                quotient_partitioned_probe, quotient_delete_df, quotient_apply_ops_df,
+            ),
+        )
+        for states, probe, delete, apply_ops in families:
+            plan = _executed(states)
+            assert plan.count("FlatMapGroupsInArrow") == 1, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan
+            for df in (
+                probe(keys, "key", states, n_shards=8),
+                delete(states, keys, "key", n_shards=8),
+                apply_ops(states, ops, "key"),
+            ):
+                plan = _executed(df)
+                assert plan.count("FlatMapCoGroupsInArrow") == 1, plan
+                assert "FlatMapCoGroupsInPandas" not in plan, plan
+
+    def test_cms_heavy_hitters_merge_is_arrow_group_maps(self, spark):
+        """The heavy-hitter finish runs as one Arrow group map, two with
+        a ``tree_fanin`` pre-merge, and no pandas group map."""
+        from probabilistic_rs_spark.operators.heavy_hitters import cms_heavy_hitters
+
+        orders = spark.read.parquet(f"{SF}/orders.parquet")
+        for fanin, n_maps in ((None, 1), (2, 2)):
+            plan = _executed(
+                cms_heavy_hitters(orders, "o_custkey", eps=0.01, delta=0.01, tree_fanin=fanin)
+            )
+            assert plan.count("FlatMapGroupsInArrow") == n_maps, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan

@@ -338,8 +338,9 @@ class TestPartitionedFamily:
         )
 
         keys, _, sdf = built
-        with pytest.raises(SketchConfigError, match="power of two"):
-            quotient_partitioned_probe(keys, "k", sdf, n_shards=12)
+        for bad in (12, 1):  # one shard would route by a 64-bit shift
+            with pytest.raises(SketchConfigError, match="power of two"):
+                quotient_partitioned_probe(keys, "k", sdf, n_shards=bad)
         with pytest.raises(SketchConfigError, match="n_shards"):
             quotient_partitioned_probe(keys, "k", sdf.drop("n_shards"))
 
