@@ -21,8 +21,11 @@ from probabilistic_rs_spark.errors import (
     SketchError,
     SketchStateError,
 )
+from probabilistic_rs_spark.worker import drop_zip_importers
 
 __version__ = "0.1.0"
+
+drop_zip_importers()  # a worker deserializing a kernel imports us first
 
 __all__ = [
     "SketchError",

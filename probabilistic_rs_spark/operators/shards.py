@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 from probabilistic_rs_spark.common import op_masks
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.sketch_agg import grouped_fold
+from probabilistic_rs_spark.worker import drop_zip_importers
 
 
 def _state_schema(count_col: str) -> StructType:
@@ -210,6 +211,7 @@ def probe_shards(
     )
 
     def probe(state_tbl, probe_tbl):
+        drop_zip_importers()
         check_shard_modulus(state_tbl, ns)
         if state_tbl.num_rows and probe_tbl.num_rows:
             f = load(state_tbl.column("state")[0].as_py())
@@ -238,6 +240,7 @@ def _fold(states_df: DataFrame, keyed: DataFrame, ns: int, family: ShardFamily) 
     arrow_schema = to_arrow_schema(schema)
 
     def fold(key, state_tbl, key_tbl):
+        drop_zip_importers()
         check_shard_modulus(state_tbl, ns)
         if state_tbl.num_rows:
             f = load(state_tbl.column("state")[0].as_py())

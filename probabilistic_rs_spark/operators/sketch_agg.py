@@ -53,6 +53,7 @@ from probabilistic_rs_spark.sketches.cms import CountMinSketch
 from probabilistic_rs_spark.sketches.hll import HyperLogLog
 from probabilistic_rs_spark.sketches.kll import KLLSketch
 from probabilistic_rs_spark.sketches.tdigest import TDigest
+from probabilistic_rs_spark.worker import drop_zip_importers
 
 # value representation each sketch kind consumes
 _VALUE_KIND = {
@@ -349,6 +350,7 @@ def sketch_partials(
         import pyarrow as pa
         from pyspark import TaskContext
 
+        drop_zip_importers()
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         acc: dict[tuple, list] = {}
         counts: dict[tuple, int] = {}
@@ -396,7 +398,12 @@ def grouped_fold(df: DataFrame, keys: list[str], fold_fn, schema: StructType) ->
     The group crosses the Python boundary as Arrow columns: no pandas
     frame is built per group, and key columns keep their Arrow type
     (nulls, dates and strings pass through as they are)."""
-    return df.groupBy(*keys).applyInArrow(fold_fn, schema)
+
+    def fold(tbl):
+        drop_zip_importers()
+        return fold_fn(tbl)
+
+    return df.groupBy(*keys).applyInArrow(fold, schema)
 
 
 # Packed payload bytes a block-build partial task buffers before it emits
@@ -464,6 +471,7 @@ def packed_block_build(
     cpb_u = np.uint64(cpb)
 
     def partials(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        drop_zip_importers()
         acc: dict = {}  # (key, block) -> ([int32 offsets], [int64 weights])
         held = 0
 
@@ -663,15 +671,10 @@ def build_global_state(df: DataFrame, spec: SketchSpec, tree_fanin="auto") -> by
         # instead of P py4j-pickled Row objects — the collect was the
         # dominant cost of driver-fold builds at wide parallelism
         # (~28 MB of Bloom partials over 128 partitions at bench scale)
-        try:
-            tbl = partials.toArrow()
-            rows = sorted(
-                zip(tbl.column("__pid").to_pylist(), tbl.column(spec.state_col).to_pylist())
-            )
-        except AttributeError:  # pre-4.0 fallback
-            rows = sorted(
-                (r["__pid"], bytes(r[spec.state_col])) for r in partials.collect()
-            )
+        tbl = partials.toArrow()
+        rows = sorted(
+            zip(tbl.column("__pid").to_pylist(), tbl.column(spec.state_col).to_pylist())
+        )
         if not rows:  # empty input -> empty sketch, not a crash
             return spec.make().to_bytes()
         sk = type(spec.make()).from_bytes(rows[0][1])
@@ -699,6 +702,7 @@ def with_hll_estimate(df: DataFrame, state_col: str, out_col: str) -> DataFrame:
 
     @pandas_udf(LongType())
     def est(states: pd.Series) -> pd.Series:
+        drop_zip_importers()
         return states.map(
             lambda b: int(round(HyperLogLog.from_bytes(b).estimate()))
         ).astype("int64")
@@ -719,6 +723,7 @@ def with_quantiles(
 
     @pandas_udf(ArrayType(DoubleType()))
     def quant(states: pd.Series) -> pd.Series:
+        drop_zip_importers()
         return states.map(
             lambda b: [float(x) for x in cls.from_bytes(b).quantile(np.array(qs_local))]
         )
