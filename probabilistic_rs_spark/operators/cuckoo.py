@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import lru_evict
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.shards import (
     ShardFamily,
@@ -60,7 +60,11 @@ def _pmod_route(h, ns: int):
 
 
 def _filter_from_bytes(blob: bytes):
-    """Deserialize either cuckoo family by PEEKING its wire tag (the tag
+    return _filter_class(blob).from_bytes(blob)
+
+
+def _filter_class(blob: bytes):
+    """The cuckoo family of a state, by PEEKING its wire tag (the tag
     decides the hash derivation; cross-family probing stays impossible
     because each class still validates its own tag on the full parse).
     Dispatching on the tag itself — not on exception text — means a
@@ -69,9 +73,9 @@ def _filter_from_bytes(blob: bytes):
     instead of a misleading NCUCKOO mismatch (ADVICE r4 #1)."""
     typ = peek_type(blob)
     if typ == TYPE_CUCKOO:
-        return CuckooFilter.from_bytes(blob)
+        return CuckooFilter
     if typ == TYPE_NCUCKOO:
-        return NativeCuckooFilter.from_bytes(blob)
+        return NativeCuckooFilter
     raise SketchConfigError(
         f"not a cuckoo state: wire type tag {typ} "
         f"(expected {TYPE_CUCKOO} parity or {TYPE_NCUCKOO} native)"
@@ -296,37 +300,6 @@ def cuckoo_delete_df(
     return delete_shards(states_df, delete_df, item_col, ns, _FAMILY)
 
 
-# executor-side cache of deserialized shard lists, keyed by a content
-# hash (an id()-based key could collide after GC recycles the address
-# and silently serve a stale filter list); driver-side broadcast memo so
-# repeated probes of the same states reuse one broadcast
-_SHARDS_CACHE: dict[str, list[CuckooFilter]] = {}
-_SHARD_BROADCASTS: dict[tuple, object] = {}
-
-
-def _shards_broadcast(sc, shard_states: list[bytes]):
-    import hashlib
-
-    h = hashlib.sha1()
-    for s in shard_states:
-        h.update(len(s).to_bytes(8, "little"))
-        h.update(s)
-    key = h.hexdigest()
-    memo_key = (sc.applicationId, key)
-    entry = _SHARD_BROADCASTS.get(memo_key)
-    if entry is None:
-        entry = (key, sc.broadcast(shard_states))
-        _SHARD_BROADCASTS[memo_key] = entry
-        # oldest-only eviction (VERDICT r4 #3): the 16 still-hot entries
-        # survive when a 17th family appears
-        lru_evict(_SHARD_BROADCASTS, 16, lambda e: e[1].unpersist())
-    else:
-        # refresh recency so interleaved probe families evict true-coldest
-        _SHARD_BROADCASTS.pop(memo_key)
-        _SHARD_BROADCASTS[memo_key] = entry
-    return entry
-
-
 def cuckoo_probe(
     probe_df: DataFrame,
     item_col: str,
@@ -339,16 +312,14 @@ def cuckoo_probe(
     the same states reuse one broadcast and a per-worker cache."""
     from pyspark.sql.functions import pandas_udf
 
-    sc = probe_df.sparkSession.sparkContext
-    key, bc = _shards_broadcast(sc, shard_states)
+    # one build's shards share a family; a mixed list fails to load
+    get_shards = published_state(
+        probe_df.sparkSession.sparkContext, shard_states, _filter_class(shard_states[0])
+    )
     ns = len(shard_states)
 
     def _probe(hashes):
-        shards = _SHARDS_CACHE.get(key)
-        if shards is None:
-            shards = [_filter_from_bytes(b) for b in bc.value]
-            _SHARDS_CACHE[key] = shards
-            lru_evict(_SHARDS_CACHE, 4)
+        shards = get_shards()
         h = hashes.to_numpy(dtype="int64").view(np.uint64)
         sid = (hashes.to_numpy(dtype="int64") % ns + ns) % ns
         out = np.zeros(len(h), dtype=bool)
@@ -393,39 +364,6 @@ def cuckoo_delete(
     # every shard id has a state row, so each comes back exactly once
     assert all(new_states), "cogroup dropped a shard state"
     return new_states, removed
-
-
-# driver-side cache of the one-row shard-tables relation, keyed by
-# (applicationId, combined digest) — membership._WORDS_DF_CACHE idiom
-_TABLES_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cuckoo_tables_df(spark, shard_states: list[bytes], shards: list):
-    import hashlib
-
-    app_id = spark.sparkContext.applicationId
-    h = hashlib.sha1()
-    for s in shard_states:
-        h.update(len(s).to_bytes(8, "little"))
-        h.update(s)
-    key = (app_id, h.hexdigest())
-    df = _TABLES_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _TABLES_DF_CACHE if k[0] != app_id]:
-            try:
-                _TABLES_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        nested = [sk.table.ravel().astype(np.int64).tolist() for sk in shards]
-        df = spark.createDataFrame(
-            [(nested,)], "__ck_tables array<array<bigint>>"
-        ).cache()
-        _TABLES_DF_CACHE[key] = df
-        lru_evict(_TABLES_DF_CACHE, 8, lambda d: d.unpersist())
-    else:
-        _TABLES_DF_CACHE.pop(key)
-        _TABLES_DF_CACHE[key] = df
-    return df
 
 
 def _native_cuckoo_member_expr(item_col: str, tables, ns: int, m: int, fb: int, b: int):
@@ -486,7 +424,10 @@ def native_cuckoo_probe(
     if len(geo) != 1:
         raise SketchConfigError(f"shards disagree on geometry: {geo}")
     m, fb, b = geo.pop()
-    tdf = _cuckoo_tables_df(probe_df.sparkSession, shard_states, shards)
+    tdf = state_relation(
+        probe_df.sparkSession, shard_states, "__ck_tables array<array<bigint>>",
+        lambda: [sk.table.ravel().astype(np.int64).tolist() for sk in shards],
+    )
     from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
 
     # pushdown_barrier (round 8): keeps a downstream .where(is_member)
@@ -514,27 +455,8 @@ def native_cuckoo_semi_filter(
     in the join condition it would be evaluated without codegen CSE,
     re-deriving the h/g/fp hash chain per slot test per row) and the
     filter reads the materialized bit."""
-    shards = [_filter_from_bytes(b) for b in shard_states]
-    if not all(isinstance(sk, NativeCuckooFilter) for sk in shards):
-        raise SketchConfigError(
-            "native_cuckoo_semi_filter requires shards built with native=True"
-        )
-    geo = {(sk.m, sk.fingerprint_bits, sk.bucket_size) for sk in shards}
-    if len(geo) != 1:
-        raise SketchConfigError(f"shards disagree on geometry: {geo}")
-    m, fb, b = geo.pop()
-    tdf = _cuckoo_tables_df(probe_df.sparkSession, shard_states, shards)
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
-
-    member = pushdown_barrier(
-        _native_cuckoo_member_expr(
-            item_col, F.col("__ck_tables"), len(shard_states), m, fb, b
-        ),
-        boolean=True,
-    )
     return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn("__nck_member", member)
+        native_cuckoo_probe(probe_df, item_col, shard_states, out_col="__nck_member")
         .where(F.col("__nck_member"))
-        .drop("__ck_tables", "__nck_member")
+        .drop("__nck_member")
     )

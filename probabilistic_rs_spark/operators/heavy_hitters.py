@@ -47,6 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.sketch_agg import grouped_fold
 from probabilistic_rs_spark.sketches.cms import CountMinSketch
@@ -289,29 +290,6 @@ def build_cms_state(
     return bytes(row["cms_state"])
 
 
-# driver-side broadcast reuse: repeated probes against the same state
-# share one broadcast instead of leaking a new one per call
-_PROBE_BROADCASTS: dict[tuple, object] = {}
-# executor-side cache: deserialize a broadcast CMS once per worker, not
-# once per Arrow batch (same pattern as membership._FILTER_CACHE)
-_CMS_CACHE: dict[str, CountMinSketch] = {}
-
-
-def _cms_broadcast(sc, state: bytes):
-    import hashlib
-
-    key = hashlib.sha1(state).hexdigest()
-    memo_key = (sc.applicationId, key)
-    bc = _PROBE_BROADCASTS.get(memo_key)
-    if bc is None:
-        from probabilistic_rs_spark.common import lru_evict
-
-        bc = sc.broadcast(state)
-        _PROBE_BROADCASTS[memo_key] = (key, bc)
-        lru_evict(_PROBE_BROADCASTS, 32, lambda e: e[1].unpersist())
-    return _PROBE_BROADCASTS[memo_key]
-
-
 def cms_probe(
     probe_df: DataFrame,
     key_col: str,
@@ -328,51 +306,19 @@ def cms_probe(
     driver broadcast and a per-worker deserialized-CMS cache."""
     from pyspark.sql.functions import pandas_udf
 
-    sc = probe_df.sparkSession.sparkContext
-    key, bc = _cms_broadcast(sc, state)
+    get_cms = published_state(
+        probe_df.sparkSession.sparkContext, state, CountMinSketch
+    )
 
     @pandas_udf(LongType())
     def est(hashes: pd.Series) -> pd.Series:
-        from probabilistic_rs_spark.common import lru_evict
-
-        cms = _CMS_CACHE.get(key)
-        if cms is None:
-            cms = CountMinSketch.from_bytes(bc.value)
-            _CMS_CACHE[key] = cms
-            lru_evict(_CMS_CACHE, 8)
+        cms = get_cms()
         h = hashes.to_numpy(dtype="int64").view(np.uint64)
         return pd.Series(cms.estimate_hashes(h).astype(np.int64))
 
     return probe_df.withColumn(
         out_col, est(F.xxhash64(F.col(key_col).cast("string")))
     )
-
-
-# driver-side cache of the one-row table relation per (session, state
-# digest) — same idiom as membership._WORDS_DF_CACHE
-_CMS_TABLE_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cms_table_df(spark, state: bytes, cms: CountMinSketch) -> DataFrame:
-    from probabilistic_rs_spark.common import state_key
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state))
-    df = _CMS_TABLE_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _CMS_TABLE_DF_CACHE if k[0] != app_id]:
-            try:
-                _CMS_TABLE_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        df = spark.createDataFrame(
-            [(cms.table.tolist(),)], "__cms_rows array<array<bigint>>"
-        ).cache()
-        _CMS_TABLE_DF_CACHE[key] = df
-        from probabilistic_rs_spark.common import lru_evict
-
-        lru_evict(_CMS_TABLE_DF_CACHE, 8, lambda d: d.unpersist())
-    return df
 
 
 def native_cms_probe(
@@ -394,7 +340,10 @@ def native_cms_probe(
     d row lookups, evaluated inside whole-stage codegen. Identical
     estimates to :func:`cms_probe` by construction."""
     cms = CountMinSketch.from_bytes(state)
-    tdf = _cms_table_df(probe_df.sparkSession, state, cms)
+    tdf = state_relation(
+        probe_df.sparkSession, state, "__cms_rows array<array<bigint>>",
+        lambda: cms.table.tolist(),
+    )
     h = F.xxhash64(F.col(key_col).cast("string"))
     h1 = F.call_function("shiftrightunsigned", h, F.lit(32))
     h2 = h.bitwiseAND(F.lit(0xFFFFFFFF)).bitwiseOR(F.lit(1))

@@ -2,10 +2,10 @@
 
 The probe is the Spark restatement of the reference's ``contains_bulk``
 (``src/bloom/filter.rs:440-477``): the final filter bytes are broadcast to
-executors once, and a vectorized ``pandas_udf`` tests a whole Arrow batch
-per call. At scale this is the approximate semi-join the Bloom filter
-exists for (SURVEY.md §2.7): a ~1–100 MB broadcast replaces shuffling the
-full probe side.
+executors once (``common.published_state``), and a vectorized
+``pandas_udf`` tests a whole Arrow batch per call. At scale this is the
+approximate semi-join the Bloom filter exists for (SURVEY.md §2.7): a
+~1–100 MB broadcast replaces shuffling the full probe side.
 """
 
 from __future__ import annotations
@@ -17,18 +17,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import state_key
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.operators.sketch_agg import (
     SketchSpec,
     build_global_state,
     sketch_aggregate,
 )
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
-
-# executor-side cache: deserialize a broadcast filter once per worker,
-# not once per Arrow batch (analog of the reference's long-lived filter
-# object behind Arc<RwLock>, src/bloom/filter.rs:20-34)
-_FILTER_CACHE: dict[str, BloomSketch] = {}
 
 
 def build_bloom_state(
@@ -55,17 +50,6 @@ def build_bloom_state(
     return build_global_state(df, spec, tree_fanin)
 
 
-def _get_filter(key: str, blob: bytes) -> BloomSketch:
-    from probabilistic_rs_spark.common import lru_evict
-
-    sk = _FILTER_CACHE.get(key)
-    if sk is None:
-        sk = BloomSketch.from_bytes(blob)
-        _FILTER_CACHE[key] = sk
-        lru_evict(_FILTER_CACHE, 8)
-    return sk
-
-
 def bloom_probe(
     probe_df: DataFrame,
     item_col: str,
@@ -75,9 +59,9 @@ def bloom_probe(
     """Adds a boolean membership column. Zero false negatives guaranteed
     (reference gate ``tests/core_bloom_filter_tests.rs:402-420``); false
     positives bounded by the filter's configured FPR."""
-    sc = probe_df.sparkSession.sparkContext
-    bc = sc.broadcast(state)
-    key = state_key(state)
+    get_filter = published_state(
+        probe_df.sparkSession.sparkContext, state, BloomSketch
+    )
 
     @pandas_udf(BooleanType())
     def probe(items: pd.Series) -> pd.Series:
@@ -85,7 +69,7 @@ def bloom_probe(
 
         from probabilistic_rs_spark.functions.hashing import pad_batch_arrow
 
-        sk = _get_filter(key, bc.value)
+        sk = get_filter()
         buf, lens = pad_batch_arrow(
             pa.Array.from_pandas(items, type=pa.string()), scratch_key="bloom_probe"
         )
@@ -134,43 +118,6 @@ def build_native_bloom_state(
     return build_global_state(df, spec, tree_fanin)
 
 
-# driver-side cache: the one-row words relation per filter state, so
-# repeated probes against the same filter reuse one cached (and hence
-# one-time-serialized) local relation instead of re-pickling ~MBs of
-# words through createDataFrame per probe. Keyed by
-# (applicationId, full-blob digest): a cached DataFrame is bound to the
-# SparkSession that built it, so after a session restart the same state
-# must build a fresh relation (ADVICE r3 #2 — stale entries from dead
-# sessions are evicted on the way through). Bounded like the
-# executor-side _FILTER_CACHE.
-_WORDS_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _native_words_df(spark, state: bytes, words) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state))
-    df = _WORDS_DF_CACHE.get(key)
-    if df is None:
-        # drop relations bound to other (stopped) sessions first
-        for old_key in [k for k in _WORDS_DF_CACHE if k[0] != app_id]:
-            try:
-                _WORDS_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass  # the owning session is gone; nothing to release
-        # one-row relation (NOT F.lit(list): that builds a CreateArray
-        # with one analyzer child PER ELEMENT — catastrophic at 10^5+
-        # words; and NOT from_json(lit): JsonToStructs is not constant-
-        # folded, so it would re-parse per batch — measured 10x slower)
-        df = spark.createDataFrame([(words.tolist(),)], "__nbf_words array<bigint>")
-        df = df.cache()
-        _WORDS_DF_CACHE[key] = df
-        # oldest-only eviction (VERDICT r4 #3): still-hot relations survive
-        from probabilistic_rs_spark.common import lru_evict
-
-        lru_evict(_WORDS_DF_CACHE, 8, lambda d: d.unpersist())
-    return df
-
-
 def _native_member_expr(item_col: str, warr, m: int, k: int):
     """The JVM membership predicate: AND over k bit tests
     ``shiftrightunsigned(words[pos_i >> 6], pos_i & 63) & 1 = 1`` with
@@ -217,7 +164,10 @@ def native_bloom_probe(
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
     sk = NativeBloomSketch.from_bytes(state)
-    bf_df = _native_words_df(probe_df.sparkSession, state, sk.words())
+    bf_df = state_relation(
+        probe_df.sparkSession, state, "__nbf_words array<bigint>",
+        lambda: sk.words().tolist(),
+    )
     joined = probe_df.crossJoin(F.broadcast(bf_df))
     member = pushdown_barrier(
         _native_member_expr(item_col, F.col("__nbf_words"), sk.m, sk.k),
@@ -237,18 +187,8 @@ def native_bloom_semi_filter(
     tests each re-derived both KM base hashes per row; the barriered
     projection computes the two hashes once and the filter reads the
     materialized bit."""
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
-    from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
-
-    sk = NativeBloomSketch.from_bytes(state)
-    bf_df = _native_words_df(probe_df.sparkSession, state, sk.words())
-    member = pushdown_barrier(
-        _native_member_expr(item_col, F.col("__nbf_words"), sk.m, sk.k),
-        boolean=True,
-    )
     return (
-        probe_df.crossJoin(F.broadcast(bf_df))
-        .withColumn("__nbf_member", member)
+        native_bloom_probe(probe_df, item_col, state, out_col="__nbf_member")
         .where(F.col("__nbf_member"))
-        .drop("__nbf_words", "__nbf_member")
+        .drop("__nbf_member")
     )

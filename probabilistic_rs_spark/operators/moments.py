@@ -27,14 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.sketches.countsketch import CountSketch
-
-# driver-side broadcast reuse + executor-side deserialized-state cache —
-# same pattern as heavy_hitters._PROBE_BROADCASTS/_CMS_CACHE
-_PROBE_BROADCASTS: dict[tuple, object] = {}
-_CS_CACHE: dict[str, CountSketch] = {}
-_CS_TABLE_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def build_cs_state(
@@ -192,22 +187,6 @@ def cs_apply_ops_df(
     return gen.to_bytes()
 
 
-def _cs_broadcast(sc, state: bytes):
-    import hashlib
-
-    key = hashlib.sha1(state).hexdigest()
-    memo_key = (sc.applicationId, key)
-    bc = _PROBE_BROADCASTS.get(memo_key)
-    if bc is None:
-        from probabilistic_rs_spark.common import lru_evict
-
-        bc = sc.broadcast(state)
-        _PROBE_BROADCASTS[memo_key] = (key, bc)
-        lru_evict(_PROBE_BROADCASTS, 16)
-        return key, bc
-    return bc
-
-
 def cs_probe(
     probe_df: DataFrame,
     key_col: str,
@@ -224,18 +203,13 @@ def cs_probe(
 
     from probabilistic_rs_spark.operators.sketch_agg import native_bloom_base_hash_exprs
 
-    sc = probe_df.sparkSession.sparkContext
-    key, bc = _cs_broadcast(sc, state)
+    get_cs = published_state(
+        probe_df.sparkSession.sparkContext, state, CountSketch
+    )
 
     @pandas_udf(LongType())
     def est(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-        from probabilistic_rs_spark.common import lru_evict
-
-        cs = _CS_CACHE.get(key)
-        if cs is None:
-            cs = CountSketch.from_bytes(bc.value)
-            _CS_CACHE[key] = cs
-            lru_evict(_CS_CACHE, 8)
+        cs = get_cs()
         base = np.stack(
             [h1s.to_numpy(dtype="int64"), h2s.to_numpy(dtype="int64")], axis=1
         )
@@ -243,27 +217,6 @@ def cs_probe(
 
     h1, h2 = native_bloom_base_hash_exprs(F.col(key_col))
     return probe_df.withColumn(out_col, est(h1, h2))
-
-
-def _cs_table_df(spark, state: bytes, cs: CountSketch) -> DataFrame:
-    from probabilistic_rs_spark.common import lru_evict, state_key
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state))
-    df = _CS_TABLE_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _CS_TABLE_DF_CACHE if k[0] != app_id]:
-            try:
-                _CS_TABLE_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        # flat d·w layout: one element_at per read (index j·w + bucket)
-        df = spark.createDataFrame(
-            [(cs.table.ravel().tolist(),)], "__cs_flat array<bigint>"
-        ).cache()
-        _CS_TABLE_DF_CACHE[key] = df
-        lru_evict(_CS_TABLE_DF_CACHE, 8, lambda d: d.unpersist())
-    return df
 
 
 def _batcher_pairs(n: int) -> list[tuple[int, int]]:
@@ -356,7 +309,11 @@ def native_cs_probe(
     )
 
     cs = CountSketch.from_bytes(state)
-    tdf = _cs_table_df(probe_df.sparkSession, state, cs)
+    # flat d·w layout: one element_at per read (index j·w + bucket)
+    tdf = state_relation(
+        probe_df.sparkSession, state, "__cs_flat array<bigint>",
+        lambda: cs.table.ravel().tolist(),
+    )
     h1, h2 = native_bloom_base_hash_exprs(F.col(key_col))
     mask = F.lit(int(cs.w - 1))
     reads = []

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.operators.sketch_agg import (
     SketchSpec,
     sketch_aggregate,
@@ -66,18 +67,22 @@ def tdigest_cdf_probe(
     ("which decile is this document's length in?") at any scale: the
     digest is broadcast once, the probe is a vectorized map-side batch
     interp with zero exchanges."""
+    from probabilistic_rs_spark.sketches.tdigest import TDigest
+
+    return _cdf_probe(probe_df, value_col, state, out_col, TDigest)
+
+
+def _cdf_probe(probe_df: DataFrame, value_col: str, state: bytes, out_col: str, sketch):
+    """The shared pandas body of the CDF probes: ``cdf_batch`` of the
+    ``sketch`` state over each Arrow batch, deserialized once per worker."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 
-    from probabilistic_rs_spark.sketches.tdigest import TDigest
-
-    sc = probe_df.sparkSession.sparkContext
-    bc = sc.broadcast(state)
+    get_sketch = published_state(probe_df.sparkSession.sparkContext, state, sketch)
 
     def _cdf(vals):
-        td = TDigest.from_bytes(bc.value)
-        return pd.Series(td.cdf_batch(vals.to_numpy(dtype="float64")))
+        return pd.Series(get_sketch().cdf_batch(vals.to_numpy(dtype="float64")))
 
     _cdf.__annotations__ = {"vals": pd.Series, "return": pd.Series}
     cdf_udf = pandas_udf(DoubleType())(_cdf)
@@ -98,11 +103,6 @@ def build_tdigest_state(
     if row is None:  # empty input -> empty digest, not a crash
         return spec.make().to_bytes()
     return bytes(row["td_state"])
-
-
-# driver-side cache of the one-row resampled-CDF relation, keyed by
-# (applicationId, state digest, resolution) — membership._WORDS_DF_CACHE idiom
-_CDF_TABLE_DF_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def native_tdigest_cdf_probe(
@@ -160,33 +160,6 @@ def native_tdigest_cdf_probe(
     )
 
 
-def _cdf_table_df(spark, state: bytes, cdf_fn, vmin: float, vmax: float, k: int):
-    """One-row cached relation of the resampled CDF table — shared by the
-    t-digest and KLL native probes (same memo idiom as
-    ``membership._WORDS_DF_CACHE``)."""
-    from probabilistic_rs_spark.common import lru_evict, state_key
-
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, state_key(state), k)
-    tdf = _CDF_TABLE_DF_CACHE.get(key)
-    if tdf is None:
-        for old_key in [kk for kk in _CDF_TABLE_DF_CACHE if kk[0] != app_id]:
-            try:
-                _CDF_TABLE_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        import numpy as np
-
-        grid = np.linspace(vmin, vmax, k + 1)
-        table = cdf_fn(grid)
-        tdf = spark.createDataFrame(
-            [(table.tolist(),)], "__cdf_table array<double>"
-        ).cache()
-        _CDF_TABLE_DF_CACHE[key] = tdf
-        lru_evict(_CDF_TABLE_DF_CACHE, 8, lambda d: d.unpersist())
-    return tdf
-
-
 def _resampled_cdf_probe(
     probe_df: DataFrame,
     value_col: str,
@@ -205,9 +178,14 @@ def _resampled_cdf_probe(
     clamp), while the KLL step-CDF already carries positive mass at the
     smallest retained item (rank(min) ≥ weight(min)), so only values
     strictly below it are 0."""
-    spark = probe_df.sparkSession
+    import numpy as np
+
     k = int(resolution)
-    tdf = _cdf_table_df(spark, state, cdf_fn, vmin, vmax, k)
+    # the resampled CDF table, cached per (state, resolution)
+    tdf = state_relation(
+        probe_df.sparkSession, state, "__cdf_table array<double>",
+        lambda: cdf_fn(np.linspace(vmin, vmax, k + 1)).tolist(), k,
+    )
     x = F.col(value_col).cast("double")
     span = (vmax - vmin) / k
     pos = (x - F.lit(vmin)) / F.lit(span)
@@ -256,22 +234,9 @@ def kll_cdf_probe(
     state — :func:`tdigest_cdf_probe`'s deterministic-compaction sibling.
     The kernel is one vectorized ``searchsorted`` over the weighted
     retained items per Arrow batch."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
     from probabilistic_rs_spark.sketches.kll import KLLSketch
 
-    sc = probe_df.sparkSession.sparkContext
-    bc = sc.broadcast(state)
-
-    def _cdf(vals):
-        sk = KLLSketch.from_bytes(bc.value)
-        return pd.Series(sk.cdf_batch(vals.to_numpy(dtype="float64")))
-
-    _cdf.__annotations__ = {"vals": pd.Series, "return": pd.Series}
-    cdf_udf = pandas_udf(DoubleType())(_cdf)
-    return probe_df.withColumn(out_col, cdf_udf(F.col(value_col).cast("double")))
+    return _cdf_probe(probe_df, value_col, state, out_col, KLLSketch)
 
 
 def native_kll_cdf_probe(

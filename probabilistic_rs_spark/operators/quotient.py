@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import state_key
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.shards import (
     ShardFamily,
@@ -52,9 +52,6 @@ from probabilistic_rs_spark.operators.sketch_agg import (
     build_global_state,
 )
 from probabilistic_rs_spark.sketches.quotient import QuotientFilter
-
-# executor-side cache: deserialize a broadcast filter once per worker
-_QF_CACHE: dict[str, QuotientFilter] = {}
 
 
 def build_quotient_state(
@@ -77,17 +74,6 @@ def build_quotient_state(
     return build_global_state(df, spec, tree_fanin)
 
 
-def _get_qf(key: str, blob: bytes) -> QuotientFilter:
-    from probabilistic_rs_spark.common import lru_evict
-
-    sk = _QF_CACHE.get(key)
-    if sk is None:
-        sk = QuotientFilter.from_bytes(blob)
-        _QF_CACHE[key] = sk
-        lru_evict(_QF_CACHE, 8)
-    return sk
-
-
 def quotient_probe(
     probe_df: DataFrame,
     item_col: str,
@@ -98,13 +84,13 @@ def quotient_probe(
     (xxhash64 inside codegen); the kernel is one ``searchsorted`` gather
     per Arrow batch against the broadcast sorted run. Map-side, zero
     exchanges; zero false negatives, FPR ≤ n·2^-p."""
-    sc = probe_df.sparkSession.sparkContext
-    bc = sc.broadcast(state)
-    key = state_key(state)
+    get_qf = published_state(
+        probe_df.sparkSession.sparkContext, state, QuotientFilter
+    )
 
     @pandas_udf(BooleanType())
     def probe(hashes: pd.Series) -> pd.Series:
-        sk = _get_qf(key, bc.value)
+        sk = get_qf()
         h = hashes.to_numpy(dtype="int64").view(np.uint64)
         return pd.Series(sk.contains_hashes(h))
 
@@ -113,41 +99,21 @@ def quotient_probe(
     )
 
 
-# driver-side cache of the bucketized one-row relation per (session,
-# state digest, bucket width) — same idiom as membership._WORDS_DF_CACHE
-_BUCKETS_DF_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def _quotient_buckets_df(spark, state: bytes, sk: QuotientFilter, bucket_bits: int):
-    """One-row ``array<array<bigint>>`` relation: the filter's sorted
-    fingerprint run split into 2^b buckets by the top b fingerprint bits.
-    The run is already sorted, so the split is one bincount + cumsum."""
-    app_id = spark.sparkContext.applicationId
-    b = min(bucket_bits, sk.p)
-    key = (app_id, state_key(state), b)
-    df = _BUCKETS_DF_CACHE.get(key)
-    if df is None:
-        for old_key in [k for k in _BUCKETS_DF_CACHE if k[0] != app_id]:
-            try:
-                _BUCKETS_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        fps = sk.fps
-        buckets = (fps.astype(np.uint64) >> np.uint64(sk.p - b)).astype(np.int64)
-        counts = np.bincount(buckets, minlength=1 << b)
-        ends = np.cumsum(counts)
-        starts = ends - counts
-        # int64 BIT PATTERNS: for p = 64 the top fingerprints read as
-        # negative longs on both sides — equality still matches because
-        # the JVM probe expression produces the identical bit pattern
-        vals = fps.astype(np.int64, copy=False) if fps.dtype == np.uint64 else fps.astype(np.int64)
-        nested = [vals[s:e].tolist() for s, e in zip(starts.tolist(), ends.tolist())]
-        df = spark.createDataFrame([(nested,)], "__qf_buckets array<array<bigint>>").cache()
-        _BUCKETS_DF_CACHE[key] = df
-        from probabilistic_rs_spark.common import lru_evict
-
-        lru_evict(_BUCKETS_DF_CACHE, 8, lambda d: d.unpersist())
-    return df, b
+def _quotient_buckets(sk: QuotientFilter, b: int) -> list[list[int]]:
+    """The filter's sorted fingerprint run split into 2^b buckets by the
+    top b fingerprint bits — the value of the one-row
+    ``array<array<bigint>>`` relation the native probe cross-joins. The
+    run is already sorted, so the split is one bincount + cumsum."""
+    fps = sk.fps
+    buckets = (fps.astype(np.uint64) >> np.uint64(sk.p - b)).astype(np.int64)
+    counts = np.bincount(buckets, minlength=1 << b)
+    ends = np.cumsum(counts)
+    starts = ends - counts
+    # int64 BIT PATTERNS: for p = 64 the top fingerprints read as
+    # negative longs on both sides — equality still matches because
+    # the JVM probe expression produces the identical bit pattern
+    vals = fps.astype(np.int64, copy=False) if fps.dtype == np.uint64 else fps.astype(np.int64)
+    return [vals[s:e].tolist() for s, e in zip(starts.tolist(), ends.tolist())]
 
 
 def _quotient_member_expr(item_col: str, barr, p: int, b: int):
@@ -190,7 +156,11 @@ def native_quotient_probe(
     fingerprints with the default 2^14 buckets (see BASELINE.md round-4
     notes). For larger runs raise ``bucket_bits``."""
     sk = QuotientFilter.from_bytes(state)
-    bdf, b = _quotient_buckets_df(probe_df.sparkSession, state, sk, bucket_bits)
+    b = min(bucket_bits, sk.p)
+    bdf = state_relation(
+        probe_df.sparkSession, state, "__qf_buckets array<array<bigint>>",
+        lambda: _quotient_buckets(sk, b), b,
+    )
     joined = probe_df.crossJoin(F.broadcast(bdf))
     from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
 
@@ -212,19 +182,12 @@ def native_quotient_semi_filter(
     is evaluated once in a barriered ProjectExec (round 8 — in the join
     condition it would be evaluated without codegen CSE) and the filter
     reads the materialized bit."""
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
-
-    sk = QuotientFilter.from_bytes(state)
-    bdf, b = _quotient_buckets_df(probe_df.sparkSession, state, sk, bucket_bits)
-    member = pushdown_barrier(
-        _quotient_member_expr(item_col, F.col("__qf_buckets"), sk.p, b),
-        boolean=True,
-    )
     return (
-        probe_df.crossJoin(F.broadcast(bdf))
-        .withColumn("__nqf_member", member)
+        native_quotient_probe(
+            probe_df, item_col, state, out_col="__nqf_member", bucket_bits=bucket_bits
+        )
         .where(F.col("__nqf_member"))
-        .drop("__qf_buckets", "__nqf_member")
+        .drop("__nqf_member")
     )
 
 

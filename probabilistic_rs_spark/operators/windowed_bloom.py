@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
+from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
@@ -222,13 +223,6 @@ def prune_states_table(spark, path: str, num_levels: int = 3, as_of=None) -> int
     return n
 
 
-# executor-side cache of deserialized level lists, keyed by a driver-side
-# content digest — one deserialize per worker lifetime, not one per Arrow
-# batch (the same cache idiom as membership._FILTER_CACHE /
-# heavy_hitters._CMS_CACHE / cuckoo._SHARDS_CACHE; VERDICT r2 item 4)
-_LEVELS_CACHE: dict[str, list[BloomSketch]] = {}
-
-
 def probe_recent(
     probe_df: DataFrame,
     item_col: str,
@@ -239,18 +233,12 @@ def probe_recent(
     """Membership over the active level set: per-level AND, cross-level OR
     — exactly the reference's ``contains`` (``src/ebloom/filter.rs:602-638``),
     vectorized over a whole Arrow batch and all levels."""
-    import hashlib
-
-    sc = probe_df.sparkSession.sparkContext
     blobs = [blob for _, _, blob in level_states]
     if max_broadcast_bytes is not None:
         _check_level_budget(sum(len(b) for b in blobs), 1, max_broadcast_bytes)
-    bc = sc.broadcast(blobs)
-    h = hashlib.sha1()
-    for b in blobs:
-        h.update(len(b).to_bytes(8, "little"))
-        h.update(b)  # full-blob digest: rotated levels can share head/tail
-    key = h.hexdigest()
+    get_levels = published_state(
+        probe_df.sparkSession.sparkContext, blobs, BloomSketch
+    )
 
     @pandas_udf(BooleanType())
     def probe(items: pd.Series) -> pd.Series:
@@ -258,13 +246,7 @@ def probe_recent(
 
         from probabilistic_rs_spark.functions.hashing import pad_batch_arrow
 
-        from probabilistic_rs_spark.common import lru_evict
-
-        levels = _LEVELS_CACHE.get(key)
-        if levels is None:
-            levels = [BloomSketch.from_bytes(b) for b in bc.value]
-            _LEVELS_CACHE[key] = levels
-            lru_evict(_LEVELS_CACHE, 8)
+        levels = get_levels()
         buf, lens = pad_batch_arrow(
             pa.Array.from_pandas(items, type=pa.string()), scratch_key="wb_probe"
         )
@@ -274,12 +256,6 @@ def probe_recent(
         return pd.Series(res)
 
     return probe_df.withColumn(out_col, probe(F.col(item_col).cast("string")))
-
-
-# driver-side cache of the stacked level-words relation, keyed by
-# (applicationId, combined full-blob digest) — membership._WORDS_DF_CACHE
-# idiom
-_LEVEL_WORDS_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def native_probe_recent(
@@ -297,9 +273,6 @@ def native_probe_recent(
     (``src/ebloom/filter.rs:602-638``) entirely inside whole-stage
     codegen. All levels must share one (m, k) config (they do by
     construction — one spec builds every window)."""
-    import hashlib
-
-    from probabilistic_rs_spark.common import state_key
     from probabilistic_rs_spark.operators.membership import _native_member_expr
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
@@ -317,28 +290,11 @@ def native_probe_recent(
             f"native_probe_recent needs one shared (m, k) across levels, got {mk}"
         )
     m, k = mk.pop()
-    spark = probe_df.sparkSession
-    app_id = spark.sparkContext.applicationId
-    h = hashlib.sha1()
-    for _, _, blob in level_states:
-        h.update(len(blob).to_bytes(8, "little"))
-        h.update(blob)
-    key = (app_id, h.hexdigest())
-    ldf = _LEVEL_WORDS_DF_CACHE.get(key)
-    if ldf is None:
-        for old_key in [kk for kk in _LEVEL_WORDS_DF_CACHE if kk[0] != app_id]:
-            try:
-                _LEVEL_WORDS_DF_CACHE.pop(old_key).unpersist()
-            except Exception:
-                pass
-        ldf = spark.createDataFrame(
-            [([sk.words().tolist() for sk in sketches],)],
-            "__wbl_words array<array<bigint>>",
-        ).cache()
-        _LEVEL_WORDS_DF_CACHE[key] = ldf
-        from probabilistic_rs_spark.common import lru_evict
-
-        lru_evict(_LEVEL_WORDS_DF_CACHE, 8, lambda d: d.unpersist())
+    ldf = state_relation(
+        probe_df.sparkSession, [blob for _, _, blob in level_states],
+        "__wbl_words array<array<bigint>>",
+        lambda: [sk.words().tolist() for sk in sketches],
+    )
     member = None
     for lv in range(len(sketches)):
         warr = F.element_at(F.col("__wbl_words"), F.lit(lv + 1))

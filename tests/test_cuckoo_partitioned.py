@@ -341,22 +341,35 @@ class TestLruEviction:
         lru_evict(cache, 2, boom)
         assert list(cache) == [3, 4]
 
-    def test_shard_broadcast_memo_keeps_hot_entries(self, spark):
-        # 17 interleaved probe families: only the single oldest broadcast
-        # is evicted; the 16 hot ones keep their memo entries (VERDICT r4
+    def test_shard_broadcast_memo_keeps_hot_entries(self, spark, monkeypatch):
+        # bound + 1 interleaved probe families on the shared broadcast
+        # memo: only the single oldest broadcast is evicted, and it is
+        # unpersisted; the hot ones keep their memo entries (VERDICT r4
         # #3 'done' criterion)
-        from probabilistic_rs_spark.operators import cuckoo as ck
+        from pyspark.broadcast import Broadcast
 
-        ck._SHARD_BROADCASTS.clear()
+        from probabilistic_rs_spark import common
+
+        released = []
+        unpersist = Broadcast.unpersist
+
+        def spy(bc, *args, **kwargs):
+            released.append(bc)
+            return unpersist(bc, *args, **kwargs)
+
+        monkeypatch.setattr(Broadcast, "unpersist", spy)
+        common._BROADCASTS.clear()
         sc = spark.sparkContext
-        families = [[bytes([i]) * 64] for i in range(17)]
-        entries = [ck._shards_broadcast(sc, fam) for fam in families]
-        assert len(ck._SHARD_BROADCASTS) == 16
-        # oldest (family 0) evicted; families 1..16 still memoized
+        bound = common.BROADCAST_MEMO_MAX
+        families = [[bytes([i]) * 64] for i in range(bound + 1)]
+        entries = [common.broadcast_state(sc, fam)[1] for fam in families]
+        assert len(common._BROADCASTS) == bound
+        assert released == [entries[0]]
+        # oldest (family 0) evicted; families 1..bound still memoized
         for fam, entry in zip(families[1:], entries[1:]):
-            assert ck._shards_broadcast(sc, fam) is entry
-        assert ck._shards_broadcast(sc, families[0]) is not entries[0]
-        ck._SHARD_BROADCASTS.clear()
+            assert common.broadcast_state(sc, fam)[1] is entry
+        assert common.broadcast_state(sc, families[0])[1] is not entries[0]
+        common._BROADCASTS.clear()
 
 
 class TestWindowedBloomBudget:

@@ -478,7 +478,7 @@ class TestNativeProbe:
 def test_native_probe_wide_fingerprints_p_over_32(spark):
     """p > 32 → uint64 fingerprints stored as int64 BIT PATTERNS in the
     broadcast buckets; the JVM expression must agree on every verdict
-    (the sign-bit path the int64-view comment in _quotient_buckets_df
+    (the sign-bit path the int64-view comment in _quotient_buckets
     promises)."""
     from probabilistic_rs_spark.operators.quotient import (
         build_quotient_state,

@@ -63,16 +63,26 @@ class TestPushdownBarrier:
         )
         assert "Filter" in plan
 
-    def test_native_bloom_semi_filter_join_carries_no_bit_tests(self, spark):
-        from probabilistic_rs_spark.operators.membership import (
-            build_native_bloom_state,
-            native_bloom_semi_filter,
-        )
+    @pytest.mark.parametrize("family", ["bloom", "quotient", "cuckoo"])
+    def test_native_bloom_semi_filter_join_carries_no_bit_tests(self, spark, family):
+        # every native semi filter is its probe plus a filter on the
+        # barriered column, so each keeps the predicate out of the join
+        from probabilistic_rs_spark.operators import cuckoo, membership, quotient
 
         orders = spark.read.parquet(f"{SF}/orders.parquet")
-        state = build_native_bloom_state(orders, "o_custkey", capacity=50_000)
+        if family == "bloom":
+            state = membership.build_native_bloom_state(orders, "o_custkey", capacity=50_000)
+            semi = membership.native_bloom_semi_filter
+        elif family == "quotient":
+            state = quotient.build_quotient_state(orders, "o_custkey", capacity=50_000)
+            semi = quotient.native_quotient_semi_filter
+        else:
+            state = cuckoo.build_cuckoo_shards(
+                orders, "o_custkey", capacity=50_000, n_shards=4, native=True
+            )
+            semi = cuckoo.native_cuckoo_semi_filter
         probes = orders.select(F.col("o_custkey").alias("k"))
-        plan = _final_plan(native_bloom_semi_filter(probes, "k", state))
+        plan = _final_plan(semi(probes, "k", state))
         join_lines = [
             ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln
         ]
