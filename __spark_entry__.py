@@ -133,7 +133,8 @@ def _q_cms_partitioned_probe_event_counts(spark: SparkSession, sf_dir: str) -> D
         ev, "event_type", eps=0.001, delta=0.001, cells_per_block=512
     )
     # lazy-DataFrame contract like every other query (ADVICE r6): the
-    # probe persists the blocks internally (common.ensure_persisted,
+    # probe plans from the cells column's geometry metadata with no job
+    # and persists the blocks internally (common.ensure_persisted,
     # LRU-bounded) so the build runs once however many times the harness
     # walks the result — no driver collect() round-trip needed.
     probes = ev.select("event_type").distinct()
@@ -874,8 +875,10 @@ def _q_windowed_bloom_partitioned_members(spark: SparkSession, sf_dir: str) -> D
         capacity_per_level=100_000, target_fpr=0.0001, words_per_block=4096,
     )
     # lazy-DataFrame contract (ADVICE r6): the probe persists blocks
-    # internally (LRU-bounded), so the 3-walk probe executes the build
-    # once and the harness consumes a lazy result — no collect().
+    # internally (LRU-bounded), so the num_levels probe (one level-list
+    # job, then the bit-test join; geometry from the words column
+    # metadata) executes the build once and the harness consumes a lazy
+    # result — no collect().
     users = ev.select("user_id").distinct()
     return (
         windowed_bloom_partitioned_probe(users, "user_id", blocks, num_levels=3)

@@ -263,9 +263,10 @@ def q_pages_windowed_partitioned(spark):
         words_per_block=16384,
     ).persist()
     try:
-        blocks.count()  # materialize: the probe walks the table 3x (meta,
-        # active-window list, bit-test join) — same persist-between-stages
-        # convention as the cuckoo/quotient partitioned families
+        blocks.count()  # materialize: the num_levels probe walks the table
+        # twice (level list, bit-test join; the geometry rides in the words
+        # column metadata) — same persist-between-stages convention as the
+        # cuckoo/quotient partitioned families
         probes = pages.select("url").where(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
         hits = (
             windowed_bloom_partitioned_probe(probes, "url", blocks, num_levels=3)

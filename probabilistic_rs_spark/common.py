@@ -185,10 +185,12 @@ _BLOCKS_SEQ = [0]
 
 def ensure_persisted(df, cache: dict | None = None, max_entries: int = 16):
     """Enforce (don't just document) the blocks-persist contract of the
-    partitioned probe families (VERDICT r6 #3): the probes walk their
-    blocks table 2-3 times (geometry agg, window list, lookup join), and
-    a caller who forgets to ``persist()`` re-executes the whole build
-    plan for each walk. If ``df`` is not already persisted, persist it
+    partitioned probe families (VERDICT r6 #3): a probe of a table
+    without geometry metadata walks it twice (geometry read, lookup join),
+    so does a windowed probe restricted to ``num_levels`` (level list,
+    bit-test join), and repeated probes walk it once each — a caller who
+    forgets to ``persist()`` would re-execute the whole build plan for
+    each walk. If ``df`` is not already persisted, persist it
     MEMORY_AND_DISK here and register it in an LRU so at most
     ``max_entries`` internally-persisted tables stay pinned (eviction
     unpersists — safe, the plan recomputes on later use). Returns ``df``.
@@ -209,31 +211,13 @@ def ensure_persisted(df, cache: dict | None = None, max_entries: int = 16):
     return df
 
 
-def block_geometry(blocks_df, geom_cols: list[str], what: str, *extra_aggs):
-    """``(geometry ints, agg row)`` of a partitioned probe family's blocks
-    table, or None when it is empty: ONE agg job reads max and min of
-    each self-describing geometry column, plus ``extra_aggs`` (e.g. the
-    windowed family's ``collect_set(level)``). Raises on a table mixing
-    geometries — probing two builds' blocks at once would silently mix
-    mismatched positions."""
-    from pyspark.sql import functions as F
-
-    from probabilistic_rs_spark.errors import SketchConfigError
-
-    row = blocks_df.agg(
-        *(F.max(c).alias(f"{c}_hi") for c in geom_cols),
-        *(F.min(c).alias(f"{c}_lo") for c in geom_cols),
-        *extra_aggs,
-    ).head()
-    if row is None or row[f"{geom_cols[0]}_hi"] is None:
-        return None
-    hi = tuple(row[f"{c}_hi"] for c in geom_cols)
-    if hi != tuple(row[f"{c}_lo"] for c in geom_cols):
-        ranges = ", ".join(f"{c} {row[c + '_lo']}..{row[c + '_hi']}" for c in geom_cols)
-        raise SketchConfigError(
-            f"blocks_df mixes {what} ({ranges}) — probe one build's blocks at a time"
-        )
-    return tuple(int(v) for v in hi), row
+def block_geometry(blocks_df, geom_cols: list[str]):
+    """The geometry ints of a block table that carries no geometry
+    metadata (``operators/blocks.py``), read from its first row by one
+    small job, or None when it is empty. The probe checks every other
+    row against them inside the task."""
+    row = blocks_df.select(*geom_cols).head()
+    return None if row is None else tuple(int(v) for v in row)
 
 
 def op_masks(ops):

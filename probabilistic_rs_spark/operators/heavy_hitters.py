@@ -488,19 +488,15 @@ def _cms_geometry(eps: float, delta: float) -> tuple[int, int]:
     return d, 1 << (w - 1).bit_length()
 
 
-def _cms_cell_structs(h, d: int, w: int):
-    """d ``struct(row, cell)`` expressions from one xxhash64 column — the
-    same KM derivation ``sketches/cms.py:_cells`` and
-    :func:`native_cms_probe` use (h1 < 2^32, j·h2 < d·2^32 ≪ 2^63: ANSI
-    arithmetic cannot overflow; signed math equals the kernel's uint64)."""
-    h1 = F.call_function("shiftrightunsigned", h, F.lit(32))
-    h2 = h.bitwiseAND(F.lit(0xFFFFFFFF)).bitwiseOR(F.lit(1))
-    mask = F.lit(int(w - 1))
+def _cms_targets(h: str, d: int, w: int) -> list[str]:
+    """The d probe targets ``named_struct(row, __cell)`` of the xxhash64
+    column ``h``, as SQL — the same KM derivation
+    ``sketches/cms.py:_cells`` and :func:`native_cms_probe` use (h1 <
+    2^32, j·h2 < d·2^32 ≪ 2^63: ANSI arithmetic cannot overflow; signed
+    math equals the kernel's uint64)."""
+    h1, h2 = f"shiftrightunsigned({h}, 32)", f"(({h} & 4294967295) | 1)"
     return [
-        F.struct(
-            F.lit(int(j)).alias("row"),
-            (h1 + F.lit(int(j)) * h2).bitwiseAND(mask).alias("cell"),
-        )
+        f"named_struct('row', {j}, '__cell', ({h1} + {j} * {h2}) & {w - 1})"
         for j in range(d)
     ]
 
@@ -522,8 +518,10 @@ def build_cms_blocks_df(
     :func:`~probabilistic_rs_spark.operators.sketch_agg.packed_block_build`
     sums the counts into their block. Returns ``(row, block, cells, d, w,
     cells_per_block)`` — blocks that received no counts are absent
-    (probes read them as zero). One build's blocks per table — the same
-    contract as every partitioned family."""
+    (probes read them as zero); ``cells`` carries the geometry in its
+    column metadata (``operators/blocks.py``). One build's blocks per
+    table — the same contract as every partitioned family."""
+    from probabilistic_rs_spark.operators.blocks import GEOMETRY
     from probabilistic_rs_spark.operators.sketch_agg import packed_block_build
 
     cpb = int(cells_per_block)
@@ -552,10 +550,11 @@ def build_cms_blocks_df(
         counts, StructField("row", IntegerType(), False), cells, w, cpb, scatter,
         weighted=True,
     )
+    geometry = {"d": d, "w": w, "cells_per_block": cpb}
     return blocks.select(
         "row",
         "block",
-        F.col("values").alias("cells"),
+        F.col("values").alias("cells", metadata={GEOMETRY: geometry}),
         F.lit(d).cast("int").alias("d"),
         F.lit(w).cast("long").alias("w"),
         F.lit(cpb).cast("int").alias("cells_per_block"),
@@ -571,61 +570,41 @@ def cms_partitioned_probe(
     """Point estimates against the DISTRIBUTED CMS blocks table — the
     non-broadcast sibling of :func:`cms_probe` / :func:`native_cms_probe`
     with identical estimates by construction (same hash, same KM cells,
-    same min-combine):
-
-    1. distinct probe keys compute their d (row, cell) targets in
-       codegen and explode to d rows;
-    2. a LEFT equi-join on (row, block) routes each lookup to the task
-       holding that matrix slice (an absent block row is a zero cell —
-       ``coalesce``);
-    3. ``min`` over the d values per key, re-joined to the probe rows by
-       the key's xxhash64 — never by key value: the matrix was BUILT by
-       grouping on that same hash and every cell derives from it, so
-       equal hashes get identical estimates by construction, and probe
-       keys shuffle as 8 fixed bytes instead of arbitrary-width strings
-       (the compact estimate relation is broadcast-eligible for the
-       rejoin; the hash is non-null even for null keys, which the build
-       counted under the same constant hash).
+    same min-combine), through the block-table engine
+    (``operators/blocks.py``): distinct probe keys explode to their d
+    (row, cell) targets, LEFT-join their (row, block) slice (an absent
+    block is a zero cell), take the ``min`` per key and rejoin the probe
+    rows by the key's xxhash64 — the hash the build grouped on, so equal
+    hashes get identical estimates and keys shuffle as 8 fixed bytes.
 
     Shuffle volume: d·20 B per distinct probe key + the blocks table —
-    row-count-bounded, never matrix-size-bounded. The probe walks
-    ``blocks_df`` twice (geometry check + lookup join), so the
-    persist-before-probe contract is ENFORCED here (VERDICT r6 #3): an
-    unpersisted table is persisted internally via
-    ``common.ensure_persisted`` (LRU-bounded; already-persisted tables
-    pass through untouched)."""
-    from probabilistic_rs_spark.common import block_geometry, ensure_persisted
+    row-count-bounded, never matrix-size-bounded. The geometry comes
+    from the ``cells`` column metadata, so planning launches no job; a
+    table without it (saved by an older build) reads it with one small
+    job. A table mixing geometries fails at the action. An unpersisted
+    table is persisted internally (``common.ensure_persisted``)."""
+    from probabilistic_rs_spark.operators.blocks import (
+        probe_block_table,
+        resolve_geometry,
+    )
 
-    blocks_df = ensure_persisted(blocks_df)
-    meta = block_geometry(blocks_df, ["d", "w", "cells_per_block"], "CMS geometries")
-    if meta is None:
-        return probe_df.withColumn(out_col, F.lit(0).cast("bigint"))
-    (d, w, cpb), _ = meta
-    pr = probe_df.withColumn(
-        "__cmsph", F.xxhash64(F.col(key_col).cast("string"))
+    zero = F.lit(0).cast("bigint")
+    resolved = resolve_geometry(
+        blocks_df, "cells", ["d", "w", "cells_per_block"], "CMS geometries"
     )
-    keys = pr.select("__cmsph").distinct()
-    e = keys.select(
-        "__cmsph",
-        F.explode(F.array(*_cms_cell_structs(F.col("__cmsph"), d, w))).alias("__rc"),
-    ).select(
-        "__cmsph",
-        F.col("__rc.row").alias("row"),
-        F.expr(f"CAST(__rc.cell DIV {cpb} AS INT)").alias("block"),
-        F.expr(f"CAST(__rc.cell % {cpb} AS INT)").alias("__off"),
+    if resolved is None:
+        return probe_df.withColumn(out_col, zero)
+    (d, w, cpb), blocks = resolved
+
+    def fold(joined: DataFrame) -> DataFrame:
+        cell = F.expr("coalesce(element_at(cells, __off + 1), 0L)")
+        return joined.groupBy("__cmsph").agg(F.min(cell).alias("__v"))
+
+    return probe_block_table(
+        probe_df, out_col, {"__cmsph": F.xxhash64(F.col(key_col).cast("string"))},
+        _cms_targets("__cmsph", d, w), cpb, blocks.select("row", "block", "cells"),
+        ["row", "block"], fold, zero,
     )
-    joined = e.join(
-        blocks_df.select("row", "block", "cells"), ["row", "block"], "left"
-    )
-    val = F.coalesce(
-        F.element_at(F.col("cells"), F.col("__off") + F.lit(1)),
-        F.lit(0).cast("bigint"),
-    )
-    ests = joined.groupBy("__cmsph").agg(F.min(val).alias("__cmsp_est"))
-    out = pr.join(ests, ["__cmsph"], "left")
-    return out.withColumn(
-        out_col, F.coalesce(F.col("__cmsp_est"), F.lit(0).cast("bigint"))
-    ).drop("__cmsph", "__cmsp_est")
 
 
 # ---------------------------------------------------------------------------

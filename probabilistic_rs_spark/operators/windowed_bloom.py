@@ -32,6 +32,7 @@ from probabilistic_rs_spark.common import published_state, state_relation
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
+from probabilistic_rs_spark.worker import drop_zip_importers
 
 
 DEFAULT_MAX_LEVEL_BROADCAST_BYTES = 256 * 1024 * 1024
@@ -121,9 +122,7 @@ def recent_level_states(
     batch analog of the reference's active level set (levels beyond
     ``num_levels`` are 'expired', ``src/ebloom/filter.rs:249-266``).
     Collects only tiny (ts, state) rows to the driver."""
-    if not (0 < num_levels <= 255):
-        # reference cap: levels must fit one byte (src/ebloom/config.rs:53-57)
-        raise SketchConfigError("num_levels must be in 1..=255")
+    _check_num_levels(num_levels)
     cur = states_df
     if as_of is not None:
         cur = cur.where(F.col("window_start") <= F.lit(as_of))
@@ -144,8 +143,7 @@ def active_window_states(
     ``src/ebloom/filter.rs:249-266``)."""
     from pyspark.sql import Window as W
 
-    if not (0 < num_levels <= 255):
-        raise SketchConfigError("num_levels must be in 1..=255")
+    _check_num_levels(num_levels)
     cur = states_df
     if as_of is not None:
         cur = cur.where(F.col("window_start") <= F.lit(as_of))
@@ -380,13 +378,19 @@ def windowed_states_to_blocks_df(
     ``window_start``, ``bloom_state`` columns) into the distributed
     blocks table probed by :func:`windowed_bloom_partitioned_probe`.
 
-    Runs as ``mapInPandas`` over the active state rows — level bytes go
+    Runs as ``mapInArrow`` over the active state rows — level bytes go
     executor→executor, never through the driver, and there is NO
     broadcast-budget constraint (that is the point). All-zero blocks are
     dropped (a missing block row probes as unset bits), so sparse levels
     produce proportionally small tables. One row per (level, block) —
     dedupe appended generations (``active_window_states`` does) before
-    exploding."""
+    exploding. ``m``/``k`` come from the states at run time, so the
+    table carries no geometry metadata: its probe reads the geometry
+    with a job."""
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
     wpb = int(words_per_block)
@@ -396,35 +400,33 @@ def windowed_states_to_blocks_df(
         F.col("window_start").alias("level"), "bloom_state"
     )
     schema = _blocks_schema(active.schema["level"].dataType)
+    arrow_schema = to_arrow_schema(schema)
 
-    def explode(pdf_iter):
-        for pdf in pdf_iter:
-            levels, blocks, words_l, ms, ks, wpbs = [], [], [], [], [], []
-            for lvl, blob in zip(pdf["level"], pdf["bloom_state"]):
-                sk = NativeBloomSketch.from_bytes(bytes(blob))
+    def explode(batches):
+        drop_zip_importers()
+        for batch in batches:
+            kept = []
+            for i, blob in enumerate(batch.column(1).to_pylist()):
+                sk = NativeBloomSketch.from_bytes(blob)
                 words = sk.words()
-                for b0 in range(0, len(words), wpb):
-                    chunk = words[b0 : b0 + wpb]
-                    if not chunk.any():
-                        continue
-                    levels.append(lvl)
-                    blocks.append(b0 // wpb)
-                    words_l.append(chunk.tolist())
-                    ms.append(sk.m)
-                    ks.append(sk.k)
-                    wpbs.append(wpb)
-            yield pd.DataFrame(
-                {
-                    "level": levels,
-                    "block": pd.Series(blocks, dtype="int32"),
-                    "words": words_l,
-                    "m": pd.Series(ms, dtype="int64"),
-                    "k": pd.Series(ks, dtype="int32"),
-                    "words_per_block": pd.Series(wpbs, dtype="int32"),
-                }
+                for b in range(-(-len(words) // wpb)):
+                    chunk = words[b * wpb : (b + 1) * wpb]
+                    if chunk.any():
+                        kept.append((i, b, chunk, sk.m, sk.k))
+            rows, blocks, chunks, ms, ks = zip(*kept) if kept else ((),) * 5
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).take(pa.array(rows, pa.int32())),
+                    pa.array(blocks, pa.int32()),
+                    pa.array(chunks, arrow_schema.field(2).type),
+                    pa.array(ms, pa.int64()),
+                    pa.array(ks, pa.int32()),
+                    pa.array([wpb] * len(rows), pa.int32()),
+                ],
+                schema=arrow_schema,
             )
 
-    return active.mapInPandas(explode, schema)
+    return active.mapInArrow(explode, schema)
 
 
 def build_windowed_bloom_blocks_df(
@@ -448,7 +450,10 @@ def build_windowed_bloom_blocks_df(
 
     ``level_col`` is any atomic bucketing column (an event-time window
     start, a day number, …); a null level is one level of its own, as in
-    Spark's ``groupBy``. A nested level type raises before any job."""
+    Spark's ``groupBy``. A nested level type raises before any job.
+    ``words`` carries the geometry in its column metadata
+    (``operators/blocks.py``), so the probe plans with no job."""
+    from probabilistic_rs_spark.operators.blocks import GEOMETRY
     from probabilistic_rs_spark.operators.sketch_agg import (
         _check_group_cols,
         _group_rows,
@@ -489,10 +494,11 @@ def build_windowed_bloom_blocks_df(
     blocks = packed_block_build(
         proj, proj.schema["level"], positions, n_words * 64, wpb * 64, scatter
     )
+    geometry = {"m": m, "k": k, "words_per_block": wpb}
     return blocks.select(
         "level",
         "block",
-        F.col("values").alias("words"),
+        F.col("values").alias("words", metadata={GEOMETRY: geometry}),
         F.lit(m).cast("long").alias("m"),
         F.lit(k).cast("int").alias("k"),
         F.lit(wpb).cast("int").alias("words_per_block"),
@@ -510,151 +516,88 @@ def windowed_bloom_partitioned_probe(
     """Membership over a DISTRIBUTED level-blocks table — per-level AND,
     cross-level OR (the reference's expiring ``contains``,
     ``src/ebloom/filter.rs:602-638``) with NO broadcast of any level
-    state:
-
-    1. distinct probe items compute their k KM positions JVM-side and
-       explode to k ``(item, block, word, bit)`` rows;
-    2. an equi-join on ``block`` routes each test to the one task holding
-       that slice of every level's bit vector (bit test = pure codegen
-       ``element_at``/``shiftrightunsigned``);
-    3. per-(item, level) count of set bits == k ⇒ that level holds the
-       item (a missing block row is an unset bit — the join simply drops
-       the test); any level ⇒ member;
-    4. verdicts re-join the probe rows by the KM base-hash PAIR
-       ``(h1, h2)``, never by item value: every position — build and
-       probe alike — is a pure function of that pair, so two items with
-       equal pairs get identical verdicts BY CONSTRUCTION and the join
-       is exact. Probe items therefore shuffle as 16 fixed bytes
-       instead of arbitrary-width strings through all three probe-side
-       exchanges (distinct, per-level regroup, verdict rejoin), and the
-       compact verdict relation is broadcast-eligible for the rejoin.
+    state, through the block-table engine (``operators/blocks.py``):
+    distinct probe items explode to their k KM bit tests, equi-join
+    their block (a missing block row is an unset bit), count set bits
+    per (item, level) — count == k means the level holds the item, and a
+    null level is a level of its own, as in Spark's ``groupBy`` — and
+    any such level makes a member. Verdicts rejoin the probe rows by the
+    KM base-hash PAIR ``(h1, h2)``: every position is a pure function of
+    it, so items shuffle as 16 fixed bytes and the join is exact.
 
     Shuffle volume: ~k·24 B per distinct probe item + the blocks table —
-    row-count-bounded, never state-size-bounded. ``num_levels`` /
-    ``as_of`` restrict to the most recent levels (the O(num_levels)
-    window list rides a metadata broadcast, not the states).
+    row-count-bounded, never state-size-bounded. The geometry comes from
+    the ``words`` column metadata, so an unrestricted probe plans with no
+    job and walks ``blocks_df`` once; a table without it (e.g.
+    :func:`windowed_states_to_blocks_df` output) reads it with one small
+    job, and ``num_levels`` reads the level list with one more. A table
+    mixing geometries fails at the action. An unpersisted table is
+    persisted internally (``common.ensure_persisted``) so a forgetful
+    caller executes the build plan once.
 
-    The probe walks ``blocks_df`` three times — geometry check,
-    active-window list, bit-test join — so the contract is persist-
-    before-probe. It is ENFORCED here, not just documented (VERDICT r6
-    #3): an unpersisted ``blocks_df`` is persisted internally
-    (MEMORY_AND_DISK, LRU-bounded via ``common.ensure_persisted``) so a
-    forgetful caller executes the build plan once, not three times.
-    Callers that persist themselves keep full lifetime control.
-
-    ``num_levels`` restricts to the N most recent levels; ``as_of``
-    alone is a pure ``level <= as_of`` cutoff (no implicit top-N —
-    ADVICE r6); together, the N most recent at/before the cutoff."""
-    from probabilistic_rs_spark.common import block_geometry, ensure_persisted
-
-    blocks_df = ensure_persisted(blocks_df)
-    # one tiny agg job: the geometry check plus the distinct levels
-    # (O(active levels), driver-safe like the reference's level metadata)
-    meta = block_geometry(
-        blocks_df, ["m", "k", "words_per_block"], "geometries",
-        F.collect_set("level").alias("levels"),
+    ``num_levels`` (1..255, checked before any job) restricts to the N
+    most recent levels; ``as_of`` alone is a pure ``level <= as_of``
+    cutoff (no implicit top-N — ADVICE r6); together, the N most recent
+    at/before the cutoff."""
+    from probabilistic_rs_spark.operators.blocks import (
+        probe_block_table,
+        resolve_geometry,
     )
-    if meta is None:
-        return probe_df.withColumn(out_col, F.lit(False))
-    (m, k, wpb), row = meta
-    levels = list(row["levels"])
     from probabilistic_rs_spark.operators.sketch_agg import (
         native_bloom_base_hash_exprs,
     )
 
-    blocks = blocks_df
-    if num_levels is not None or as_of is not None:
-        if as_of is not None:
-            levels = [lv for lv in levels if lv <= as_of]
-        keep = sorted(levels, reverse=True)
-        if num_levels is not None:
-            # top-N restriction ONLY when explicitly asked: as_of alone
-            # is a pure <= cutoff (ADVICE r6 — the old implicit nl=3
-            # surprised callers wanting just a time bound)
-            nl = int(num_levels)
-            if not (0 < nl <= 255):
-                raise SketchConfigError("num_levels must be in 1..=255")
-            keep = keep[:nl]
-        if not keep:
-            return probe_df.withColumn(out_col, F.lit(False))
-        # the level list came back with the geometry agg (O(levels));
-        # an isin literal beats a dense_rank subquery + broadcast join
-        blocks = blocks.where(F.col("level").isin(keep))
-    h1e, h2e = native_bloom_base_hash_exprs(F.col(item_col))
-    pr = probe_df.withColumn("__wbh1", h1e).withColumn("__wbh2", h2e)
-    items = pr.select("__wbh1", "__wbh2").distinct()
-    pos = [
-        F.pmod(F.col("__wbh1") + F.lit(int(i)) * F.col("__wbh2"), F.lit(int(m)))
-        for i in range(k)
+    _check_num_levels(num_levels)
+    resolved = resolve_geometry(
+        blocks_df, "words", ["m", "k", "words_per_block"], "geometries"
+    )
+    if resolved is None:
+        return probe_df.withColumn(out_col, F.lit(False))
+    (m, k, wpb), blocks = resolved
+    blocks = _recent_levels(blocks, num_levels, as_of)
+    # k KM bit positions: word pos >> 6, bit pos & 63 of that word
+    targets = [
+        f"named_struct('__cell', shiftright({p}, 6), '__bit', CAST({p} & 63 AS INT))"
+        for p in (f"pmod(__wbh1 + {i} * __wbh2, {m})" for i in range(k))
     ]
-    e = items.select(
-        "__wbh1", "__wbh2", F.explode(F.array(*pos)).alias("__pos")
-    ).select(
-        "__wbh1",
-        "__wbh2",
-        F.expr(f"CAST(shiftright(__pos, 6) DIV {wpb} AS INT)").alias("block"),
-        F.expr(f"CAST(shiftright(__pos, 6) % {wpb} AS INT)").alias("__widx"),
-        F.expr("CAST(__pos & 63 AS INT)").alias("__bit"),
-    )
-    word = F.element_at(F.col("words"), F.col("__widx") + F.lit(1))
-    bit_set = (
-        F.call_function("shiftrightunsigned", word, F.col("__bit")).bitwiseAND(F.lit(1))
-        == F.lit(1)
-    )
-    joined = e.join(blocks.select("level", "block", "words"), "block").where(bit_set)
-    # active levels are already known driver-side (the meta agg collected
-    # them — O(active windows)), so the per-level set-bit counts fold
-    # into ONE aggregation keyed on the KM pair via conditional sums
-    # (round 8, guide §2.4): the former groupBy(h1, h2, level) →
-    # filter(nset = k) → distinct(h1, h2) pair of aggregations becomes a
-    # single hash aggregate (the level pivot), halving the aggregation
-    # stages; the verdict per level is count-of-set-bits == k, member =
-    # any level. Falls back to the two-stage shape when the level list
-    # is large (a pivot column per level stops paying past a few
-    # hundred).
-    unrestricted = num_levels is None and as_of is None
-    act_levels = sorted(levels, reverse=True) if unrestricted else keep
-    if len(act_levels) <= 256:
-        cnts = [
-            F.sum(F.when(F.col("level") == F.lit(lv), 1).otherwise(0)).alias(f"__l{i}")
-            for i, lv in enumerate(act_levels)
-        ]
-        # collect_set drops a null level; in the unrestricted walk the
-        # old per-level groupBy DID count it as a level of its own —
-        # keep that behavior with one extra conditional column
-        if unrestricted:
-            cnts.append(
-                F.sum(F.when(F.col("level").isNull(), 1).otherwise(0)).alias("__lnull")
-            )
-        agged = joined.groupBy("__wbh1", "__wbh2").agg(*cnts)
-        hit = None
-        for i in range(len(cnts)):
-            name = f"__l{i}" if i < len(act_levels) else "__lnull"
-            term = F.col(name) == F.lit(k)
-            hit = term if hit is None else (hit | term)
-        members = (
-            agged.where(hit)
-            .select("__wbh1", "__wbh2")
-            .withColumn("__wbp_hit", F.lit(True))
-        )
-    else:
-        per_level = (
-            joined.groupBy("__wbh1", "__wbh2", "level")
-            .agg(F.count(F.lit(1)).alias("__nset"))
-        )
-        members = (
-            per_level.where(F.col("__nset") == F.lit(k))
+
+    def fold(joined: DataFrame) -> DataFrame:
+        return (
+            joined.where("shiftrightunsigned(element_at(words, __off + 1), __bit) & 1 = 1")
+            .groupBy("__wbh1", "__wbh2", "level")
+            .count()
+            .where(F.col("count") == k)
             .select("__wbh1", "__wbh2")
             .distinct()
-            .withColumn("__wbp_hit", F.lit(True))
+            .withColumn("__v", F.lit(True))
         )
-    # (h1, h2) are non-null even for null items (xxhash64 skips nulls and
-    # finalizes to a constant — the build inserted null items at exactly
-    # those positions too), so a plain equi-join is null-correct
-    out = pr.join(members, ["__wbh1", "__wbh2"], "left")
-    return out.withColumn(out_col, F.coalesce(F.col("__wbp_hit"), F.lit(False))).drop(
-        "__wbh1", "__wbh2", "__wbp_hit"
+
+    h1, h2 = native_bloom_base_hash_exprs(F.col(item_col))
+    return probe_block_table(
+        probe_df, out_col, {"__wbh1": h1, "__wbh2": h2}, targets, wpb,
+        blocks.select("level", "block", "words"), ["block"], fold, F.lit(False),
     )
+
+
+def _check_num_levels(num_levels: int | None) -> None:
+    # reference cap: levels must fit one byte (src/ebloom/config.rs:53-57)
+    if num_levels is not None and not (0 < int(num_levels) <= 255):
+        raise SketchConfigError("num_levels must be in 1..=255")
+
+
+def _recent_levels(blocks_df: DataFrame, num_levels: int | None, as_of) -> DataFrame:
+    """The block rows of the ``num_levels`` most recent levels at/before
+    ``as_of``: ``as_of`` is a plain ``level <= as_of`` filter, and
+    ``num_levels`` keeps the top distinct non-null levels, read on the
+    driver (one small job over the level column — O(levels), like the
+    reference's level metadata) and applied as an ``isin`` literal."""
+    cur = blocks_df
+    if as_of is not None:
+        cur = cur.where(F.col("level") <= F.lit(as_of))
+    if num_levels is None:
+        return cur
+    levels = [r[0] for r in cur.select("level").distinct().collect() if r[0] is not None]
+    return cur.where(F.col("level").isin(sorted(levels, reverse=True)[: int(num_levels)]))
 
 
 def prune_expired_blocks(
@@ -662,22 +605,10 @@ def prune_expired_blocks(
 ) -> DataFrame:
     """Retention for the partitioned family — keep only the block rows of
     the ``num_levels`` most recent levels at/before ``as_of`` (the blocks
-    analog of :func:`prune_expired_windows`, same dense-rank-over-
-    distinct-levels idiom the probe uses for restriction). Write the
-    result to a new versioned location and flip a pointer to bound a
-    persisted blocks table instead of letting dead levels accumulate."""
-    from pyspark.sql import Window as W
-
-    if not (0 < int(num_levels) <= 255):
-        raise SketchConfigError("num_levels must be in 1..=255")
-    cur = blocks_df
-    if as_of is not None:
-        cur = cur.where(F.col("level") <= F.lit(as_of))
-    wins = (
-        cur.select("level")
-        .distinct()
-        .withColumn("__rk", F.dense_rank().over(W.orderBy(F.desc("level"))))
-        .where(F.col("__rk") <= int(num_levels))
-        .select("level")
-    )
-    return cur.join(F.broadcast(wins), "level")
+    analog of :func:`prune_expired_windows`, through the same level
+    restriction the probe uses; the level list is read when called).
+    Write the result to a new versioned
+    location and flip a pointer to bound a persisted blocks table instead
+    of letting dead levels accumulate."""
+    _check_num_levels(num_levels)
+    return _recent_levels(blocks_df, num_levels, as_of)

@@ -66,6 +66,19 @@ def map_in_arrow_rows():
 
 
 @pytest.fixture
+def jobs_during(spark):
+    """``jobs_during(fn)``: ``(fn(), number of Spark jobs fn launched)``."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(fn):
+        last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+        out = fn()
+        return out, max(tracker.getJobIdsForGroup(None), default=-1) - last_job
+
+    return run
+
+
+@pytest.fixture
 def small_arrow_batches(spark):
     """Feed Python stages 64-row Arrow batches, so each task sees many."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"

@@ -8,6 +8,9 @@ KM cell lookups shuffled to their block, min-combine per key.
   driver-built CountMinSketch on the same data;
 * never-seen keys estimate 0 (when their cells are empty);
 * mixed geometries and empty tables fail safe;
+* the probe plans from the ``cells`` geometry metadata with no job, kept
+  through a parquet round trip; a table without it reads its geometry
+  with a job and probes the same;
 * the probe plan needs no broadcast (shuffle equi-joins only);
 * flushing the partial stage at any byte bound leaves the blocks
   bit-identical.
@@ -107,8 +110,10 @@ class TestCmsPartitioned:
     def test_mixed_geometry_and_empty(self, spark, built):
         df, blocks, _ = built
         mixed = blocks.unionByName(blocks.withColumn("d", F.col("d") + 1))
-        with pytest.raises(SketchConfigError, match="mixes CMS geometries"):
-            cms_partitioned_probe(df.select("key").limit(1), "key", mixed)
+        # the union keeps the first child's geometry metadata; the block
+        # rows of the second fail the in-task check at the action
+        with pytest.raises(Exception, match="mixes CMS geometries"):
+            cms_partitioned_probe(df.select("key").limit(1), "key", mixed).collect()
         out = cms_partitioned_probe(
             df.select("key").limit(4), "key", blocks.where("block < 0")
         )
@@ -134,6 +139,42 @@ class TestCmsPartitioned:
                 conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
             else:
                 conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
+
+
+def _estimates(df):
+    return sorted((r["key"], r["est_count"]) for r in df.collect())
+
+
+class TestGeometryMetadata:
+    def test_probe_launches_no_job_before_its_action(self, built, jobs_during):
+        df, blocks, _ = built
+        assert blocks.schema["cells"].metadata["block_geometry"] == {
+            "d": 7, "w": 512, "cells_per_block": 64,
+        }
+        out, jobs = jobs_during(lambda: cms_partitioned_probe(df.select("key"), "key", blocks))
+        assert jobs == 0
+        assert out.count() == df.count()
+
+    def test_parquet_roundtrip_keeps_geometry(self, spark, built, tmp_path, jobs_during):
+        df, blocks, _ = built
+        path = str(tmp_path / "cms_blocks")
+        blocks.write.parquet(path)
+        loaded = spark.read.parquet(path)
+        assert loaded.schema["cells"].metadata == blocks.schema["cells"].metadata
+        probes = df.select("key").distinct()
+        out, jobs = jobs_during(lambda: cms_partitioned_probe(probes, "key", loaded))
+        assert jobs == 0
+        assert _estimates(out) == _estimates(cms_partitioned_probe(probes, "key", blocks))
+
+    def test_table_without_metadata_reads_geometry_with_a_job(self, built, jobs_during):
+        df, blocks, _ = built
+        bare = blocks.withColumn("cells", F.col("cells").alias("cells", metadata={}))
+        assert "block_geometry" not in bare.schema["cells"].metadata
+        probes = df.select("key").distinct()
+        out, jobs = jobs_during(lambda: cms_partitioned_probe(probes, "key", bare))
+        assert jobs >= 1  # a first-row read; more when leading partitions are empty
+        assert _estimates(out) == _estimates(cms_partitioned_probe(probes, "key", blocks))
+        bare.unpersist()
 
 
 def test_flush_bound_keeps_blocks_bit_identical(

@@ -256,6 +256,25 @@ class TestMergeShape:
             assert plan.count("FlatMapGroupsInArrow") == 1, plan
             assert "FlatMapGroupsInPandas" not in plan, plan
 
+    def test_states_to_blocks_is_one_arrow_map(self, spark):
+        """The window-states explode runs as a ``MapInArrow``, and no
+        pandas map is left in the plan."""
+        from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
+        from probabilistic_rs_spark.operators.windowed_bloom import (
+            windowed_states_to_blocks_df,
+        )
+
+        orders = spark.read.parquet(f"{SF}/orders.parquet")
+        spec = SketchSpec("bloom", "nbloom", "o_custkey", {"capacity": 1000})
+        states = sketch_aggregate(orders, ["o_orderpriority"], [spec])
+        plan = _executed(
+            windowed_states_to_blocks_df(
+                states.withColumnRenamed("o_orderpriority", "window_start")
+            )
+        )
+        assert "MapInArrow explode(" in plan, plan
+        assert "MapInPandas" not in plan, plan
+
     def test_shard_families_are_one_arrow_group_map_or_cogroup(self, spark):
         """Both fingerprint shard families build with one Arrow group map,
         and probe, delete and fold ops with one Arrow cogroup each; no

@@ -77,9 +77,11 @@ class TestPersistContractEnforced:
     """VERDICT r6 #3 'done' criterion: a jobs-count test showing the
     blocks build plan executes ONCE when the caller forgets to persist.
     The build source is instrumented with a marker-file-per-partition
-    ``mapInPandas``; the windowed probe walks the blocks table three
-    times (geometry, window list, bit-test join), so a re-executed build
-    would leave ~3x the markers."""
+    ``mapInPandas``; a probe walks the blocks table once per geometry
+    agg, level list and lookup join it needs (the direct builds carry
+    their geometry in column metadata, so these probes need one walk),
+    and the internal persist keeps a re-executed build from leaving a
+    multiple of the markers."""
 
     N_PARTS = 4
 

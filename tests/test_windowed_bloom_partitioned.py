@@ -6,7 +6,14 @@
 * blocks built DIRECTLY from events (never materializing a level) are
   bit-identical to blocks exploded from built states;
 * per-level AND / cross-level OR semantics, level expiry via num_levels;
-* mixed-geometry and wrong-engine inputs fail loudly;
+* mixed-geometry and wrong-engine inputs fail loudly, and a bad
+  ``num_levels`` fails before any job;
+* the direct build carries its geometry in the ``words`` column
+  metadata, so the unrestricted probe launches no job before its action,
+  also after a parquet round trip; the metadata-less states explode
+  probes the same after a job reads its geometry;
+* a stack of 300 one-item levels probes like its per-level native
+  states OR-ed together;
 * the probe plan needs no broadcast: with broadcast joins disabled it is
   still cartesian-free (shuffle equi-joins only);
 * a null level is a level of its own (as in Spark's ``groupBy``) whose
@@ -149,12 +156,13 @@ class TestPartitionedProbe:
     def test_mixed_geometry_raises(self, spark, built):
         _, _, blocks = built
         mixed = blocks.unionByName(blocks.withColumn("k", F.col("k") + 1))
-        with pytest.raises(SketchConfigError, match="mixes geometries"):
+        # the block rows of the second geometry fail the in-task check
+        with pytest.raises(Exception, match="mixes geometries"):
             windowed_bloom_partitioned_probe(
                 blocks.sparkSession.range(1).select(F.lit("u1").alias("user")),
                 "user",
                 mixed,
-            )
+            ).collect()
 
     def test_parity_engine_states_rejected(self, spark):
         ev = _events(spark)
@@ -281,6 +289,102 @@ def test_null_level_is_a_level_of_its_own(spark, level_type, value, layout):
         )
         probed = windowed_bloom_partitioned_probe(same_items.select("user"), "user", blocks)
         assert probed.where(~F.col("is_member")).count() == 0
+    finally:
+        blocks.unpersist()
+
+
+def _verdicts(df):
+    return sorted((r["user"], r["is_member"]) for r in df.collect())
+
+
+@pytest.mark.parametrize("num_levels", [0, 256])
+def test_bad_num_levels_fails_before_any_job(spark, built, num_levels):
+    # the states explode carries no geometry metadata, and its empty
+    # table used to return all-False without checking num_levels
+    blocks = built[2]
+    assert "block_geometry" not in blocks.schema["words"].metadata
+    probes = spark.range(3).select(F.lit("u1").alias("user"))
+    tracker = spark.sparkContext.statusTracker()
+    for table in (blocks, blocks.where("block < 0")):
+        last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+        with pytest.raises(SketchConfigError, match="num_levels"):
+            windowed_bloom_partitioned_probe(probes, "user", table, num_levels=num_levels)
+        assert max(tracker.getJobIdsForGroup(None), default=-1) == last_job
+
+
+class TestGeometryMetadata:
+    @pytest.fixture(scope="class")
+    def direct(self, built):
+        blocks = _direct_build(built[0].withColumnRenamed("bucket", "level")).persist()
+        yield blocks
+        blocks.unpersist()
+
+    def test_unrestricted_probe_launches_no_job(self, built, direct, jobs_during):
+        ev, _, states_blocks = built
+        assert direct.schema["words"].metadata["block_geometry"]["words_per_block"] == 64
+        probes = ev.select("user").distinct()
+        out, jobs = jobs_during(
+            lambda: windowed_bloom_partitioned_probe(probes, "user", direct)
+        )
+        assert jobs == 0
+        # the metadata-less states explode reads its geometry with a job
+        want, jobs = jobs_during(
+            lambda: windowed_bloom_partitioned_probe(probes, "user", states_blocks)
+        )
+        assert jobs >= 1
+        assert _verdicts(out) == _verdicts(want)
+
+    def test_parquet_roundtrip_keeps_geometry(
+        self, spark, built, direct, tmp_path, jobs_during
+    ):
+        path = str(tmp_path / "wb_blocks")
+        direct.write.parquet(path)
+        loaded = spark.read.parquet(path)
+        assert loaded.schema["words"].metadata == direct.schema["words"].metadata
+        probes = built[0].select("user").distinct()
+        out, jobs = jobs_during(
+            lambda: windowed_bloom_partitioned_probe(probes, "user", loaded)
+        )
+        assert jobs == 0
+        assert _verdicts(out) == _verdicts(
+            windowed_bloom_partitioned_probe(probes, "user", direct)
+        )
+
+
+def test_many_one_item_levels_match_per_level_states(spark):
+    # 300 levels of one item each: every level ORs into the verdict
+    import numpy as np
+
+    from probabilistic_rs_spark.operators.sketch_agg import native_bloom_base_hash_exprs
+    from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
+
+    n = 300
+    ev = spark.range(n).select(
+        F.col("id").alias("level"), F.concat(F.lit("u"), "id").alias("user")
+    )
+    spec = SketchSpec("bloom", "nbloom", "user", {"capacity": 50, "false_positive_rate": 0.01})
+    states = [
+        NativeBloomSketch.from_bytes(bytes(r["bloom_state"]))
+        for r in sketch_aggregate(ev, ["level"], [spec]).collect()
+    ]
+    assert len(states) == n
+    blocks = build_windowed_bloom_blocks_df(
+        ev, "level", "user", capacity_per_level=50, target_fpr=0.01, words_per_block=4
+    ).persist()
+    try:
+        probes = spark.range(2 * n).select(F.concat(F.lit("u"), "id").alias("user"))
+        got = _verdicts(windowed_bloom_partitioned_probe(probes, "user", blocks))
+        # the per-level states probed one by one, OR-ed together
+        hashed = sorted(
+            (r[0], r[1], r[2])
+            for r in probes.select("user", *native_bloom_base_hash_exprs(F.col("user"))).collect()
+        )
+        h2cols = np.array([(h1, h2) for _, h1, h2 in hashed], dtype=np.int64)
+        want = np.zeros(len(hashed), dtype=bool)
+        for sk in states:
+            want |= sk.contains_positions(sk.positions_from_base_hashes(h2cols))
+        assert got == [(u, bool(v)) for (u, _, _), v in zip(hashed, want)]
+        assert all(v for u, v in got if int(u[1:]) < n)
     finally:
         blocks.unpersist()
 
