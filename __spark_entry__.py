@@ -703,15 +703,14 @@ def _q_hll_reaggregate_states(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_cms_probe_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS point probes, BOTH probe families in one gate (round-7
-    consolidation freeing a driver slot under the 50-query cap): one
-    build (counting analog of contains_bulk, src/bloom/filter.rs:
-    440-477), estimated per probe row by the pandas map-side kernel AND
-    by the all-JVM codegen probe (``least`` over d broadcast-row lookups
-    — zero Python per probe row). Both estimate columns are exact here
-    (event_type cardinality ≪ w, no collisions) and must agree with the
-    exact-count oracle; a divergence in either family breaks its column's
-    hash."""
+    """CMS point probes: one build (counting analog of contains_bulk,
+    src/bloom/filter.rs:440-477), estimated per probe row by the all-JVM
+    codegen probe (``least`` over d broadcast-row lookups — zero Python
+    per probe row). ``cms_probe`` is now an alias of ``native_cms_probe``,
+    so both columns come from one probe; they keep the names
+    ``est_pandas`` and ``est_native`` so the result hash is unchanged.
+    Both are exact here (event_type cardinality ≪ w, no collisions) and
+    must agree with the exact-count oracle."""
     from probabilistic_rs_spark.operators.heavy_hitters import (
         build_cms_state,
         cms_probe,

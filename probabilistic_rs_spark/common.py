@@ -3,7 +3,8 @@
 ``bits2hr`` always prints two decimals, including the bytes range) —
 plus the one state-publishing path every broadcast and native probe
 shares: the sketch-state digest, the driver broadcast memo, the
-per-worker deserialized-state memo and the cached one-row relation."""
+per-worker deserialized-state memo, and :func:`relation_probe`, the
+one JVM probe shape over a memoised, Arrow-built one-row relation."""
 
 from __future__ import annotations
 
@@ -103,7 +104,7 @@ _MEMO_LOCK = threading.Lock()  # driver threads may probe concurrently
 def _memo(cache: dict, key: tuple, make, max_entries: int, release):
     """Driver-side LRU lookup of ``key = (applicationId, ...)``: a hit
     moves to the young end, a miss first releases the entries of other
-    (stopped) applications — a broadcast or cached relation is bound to
+    (stopped) applications — a broadcast or a relation is bound to
     the SparkContext that made it — then stores ``make()`` and evicts the
     least recently used entries past ``max_entries``."""
     with _MEMO_LOCK:
@@ -156,21 +157,56 @@ def published_state(sc, state: bytes | list[bytes], sketch):
     return partial(worker_state, key, bc, sketch)
 
 
-def state_relation(spark, state: bytes | list[bytes], schema: str, value, *extra_key):
-    """The cached one-row, one-column relation a native probe cross-joins
-    to read its state JVM-side, per (application, state digest,
-    ``schema``, ``extra_key``…). ``value()`` computes the column value and runs only
-    on a miss. One relation per state (NOT ``F.lit(list)``: that builds a
-    CreateArray with one analyzer child PER ELEMENT — catastrophic at
-    10^5+ words; and NOT ``from_json(lit)``: JsonToStructs is not
-    constant-folded, so it re-parses per batch — measured 10x slower),
-    cached so repeated probes reuse one serialized local relation instead
-    of re-pickling ~MBs through ``createDataFrame`` per call."""
-    return _memo(
+def _list_row(value) -> "pa.Array":
+    """A one-row Arrow list column holding ``value``: a 1-D numpy array
+    gives ``array<T>``, a list of 1-D arrays ``array<array<T>>``. The
+    numpy buffers become the Arrow values as they are (one concatenate
+    for the nested form); no Python object is made per element."""
+    import pyarrow as pa
+
+    if isinstance(value, np.ndarray):
+        values = pa.array(value)
+    else:
+        offsets = np.cumsum([0] + [len(v) for v in value], dtype=np.int32)
+        values = pa.ListArray.from_arrays(pa.array(offsets), pa.array(np.concatenate(value)))
+    return pa.ListArray.from_arrays(pa.array([0, len(values)], pa.int32()), values)
+
+
+def relation_probe(probe_df, state, schema: str, value, expr, out_col: str, *extra_key):
+    """The one JVM probe shape: cross-join ``probe_df`` with the state's
+    one-row, one-column relation (``schema`` is ``"<name> <type>"``)
+    under a broadcast hint, add ``out_col = expr(<relation column>)``
+    and drop the relation column.
+
+    The relation is memoised per (application, state digest,
+    ``schema``, ``extra_key``…) and built only on a miss, from
+    ``value()`` (a 1-D numpy array, or a list of them for
+    ``array<array<…>>``) through Arrow, so the build makes no Python
+    object per element. One relation per state, NOT ``F.lit(list)``:
+    that builds a CreateArray with one analyzer child PER ELEMENT —
+    catastrophic at 10^5+ words; and NOT ``from_json(lit)``:
+    JsonToStructs is not constant-folded, so it re-parses per batch —
+    measured 10x slower. Memoised, so repeated probes reuse one local
+    relation instead of re-sending ~MBs through ``createDataFrame`` per
+    call. Not ``cache()``d: an Arrow-built relation under
+    ``spark.sql.execution.arrow.localRelationThreshold`` is a
+    LocalRelation the broadcast reads on the driver, while a cached one
+    costs a job to materialize on the first probe."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    spark = probe_df.sparkSession
+    name = schema.split(None, 1)[0]
+    rel = _memo(
         _STATE_RELATIONS,
         (spark.sparkContext.applicationId, state_key(state), schema, *extra_key),
-        lambda: spark.createDataFrame([(value(),)], schema).cache(),
-        STATE_RELATION_MAX, lambda d: d.unpersist(),
+        lambda: spark.createDataFrame(pa.table({name: _list_row(value())}), schema),
+        STATE_RELATION_MAX, None,
+    )
+    return (
+        probe_df.crossJoin(F.broadcast(rel))
+        .withColumn(out_col, expr(F.col(name)))
+        .drop(name)
     )
 
 

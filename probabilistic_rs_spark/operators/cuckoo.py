@@ -39,8 +39,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import published_state, state_relation
+from probabilistic_rs_spark.common import published_state, relation_probe
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.membership import _semi_filter
 from probabilistic_rs_spark.operators.shards import (
     ShardFamily,
     apply_ops_shards,
@@ -424,26 +425,20 @@ def native_cuckoo_probe(
     if len(geo) != 1:
         raise SketchConfigError(f"shards disagree on geometry: {geo}")
     m, fb, b = geo.pop()
-    tdf = state_relation(
-        probe_df.sparkSession, shard_states, "__ck_tables array<array<bigint>>",
-        lambda: [sk.table.ravel().astype(np.int64).tolist() for sk in shards],
-    )
     from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
 
     # pushdown_barrier (round 8): keeps a downstream .where(is_member)
     # from inlining the 2·b slot tests into the join condition, where the
     # shared h/g/fp hash chain is re-evaluated per slot test per row
     # (join conditions get no codegen subexpression elimination)
-    member = pushdown_barrier(
-        _native_cuckoo_member_expr(
-            item_col, F.col("__ck_tables"), len(shard_states), m, fb, b
+    return relation_probe(
+        probe_df, shard_states, "__ck_tables array<array<bigint>>",
+        lambda: [sk.table.ravel().astype(np.int64) for sk in shards],
+        lambda tables: pushdown_barrier(
+            _native_cuckoo_member_expr(item_col, tables, len(shard_states), m, fb, b),
+            boolean=True,
         ),
-        boolean=True,
-    )
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, member)
-        .drop("__ck_tables")
+        out_col,
     )
 
 
@@ -455,8 +450,4 @@ def native_cuckoo_semi_filter(
     in the join condition it would be evaluated without codegen CSE,
     re-deriving the h/g/fp hash chain per slot test per row) and the
     filter reads the materialized bit."""
-    return (
-        native_cuckoo_probe(probe_df, item_col, shard_states, out_col="__nck_member")
-        .where(F.col("__nck_member"))
-        .drop("__nck_member")
-    )
+    return _semi_filter(native_cuckoo_probe, probe_df, item_col, shard_states)

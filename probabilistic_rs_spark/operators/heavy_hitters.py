@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from probabilistic_rs_spark.common import published_state, state_relation
+from probabilistic_rs_spark.common import relation_probe
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.sketch_agg import grouped_fold
 from probabilistic_rs_spark.sketches.cms import CountMinSketch
@@ -276,49 +276,10 @@ def build_cms_state(
     ``tree_fanin="auto"`` (default) enables a pre-merge level only when
     the input partition count makes it pay off; pass an explicit int to
     force one (always honored), or ``None`` to disable."""
-    from probabilistic_rs_spark.operators.sketch_agg import (
-        SketchSpec,
-        resolve_tree_fanin,
-        sketch_aggregate,
-    )
+    from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, build_global_state
 
     spec = SketchSpec("cms", "cms", key_col, {"eps": eps, "delta": delta})
-    merged = sketch_aggregate(df, [], [spec], tree_fanin=resolve_tree_fanin(df, tree_fanin))
-    row = merged.select("cms_state").head()
-    if row is None:  # empty input -> empty sketch, not a crash
-        return spec.make().to_bytes()
-    return bytes(row["cms_state"])
-
-
-def cms_probe(
-    probe_df: DataFrame,
-    key_col: str,
-    state: bytes,
-    out_col: str = "est_count",
-) -> DataFrame:
-    """Adds a bigint point-estimate column: the CMS frequency estimate for
-    each row's key (min over d rows; overestimate ≤ εN with prob ≥ 1−δ).
-    The counting analog of the Bloom ``contains_bulk`` probe: broadcast the
-    final state once, estimate whole Arrow batches map-side — zero
-    exchanges in the probe plan. Keys are hashed JVM-side with the same
-    ``xxhash64(cast string)`` the build path uses, so probe and build
-    agree byte-for-byte. Repeated probes against the same state reuse one
-    driver broadcast and a per-worker deserialized-CMS cache."""
-    from pyspark.sql.functions import pandas_udf
-
-    get_cms = published_state(
-        probe_df.sparkSession.sparkContext, state, CountMinSketch
-    )
-
-    @pandas_udf(LongType())
-    def est(hashes: pd.Series) -> pd.Series:
-        cms = get_cms()
-        h = hashes.to_numpy(dtype="int64").view(np.uint64)
-        return pd.Series(cms.estimate_hashes(h).astype(np.int64))
-
-    return probe_df.withColumn(
-        out_col, est(F.xxhash64(F.col(key_col).cast("string")))
-    )
+    return build_global_state(df, spec, tree_fanin)
 
 
 def native_cms_probe(
@@ -327,8 +288,12 @@ def native_cms_probe(
     state: bytes,
     out_col: str = "est_count",
 ) -> DataFrame:
-    """``cms_probe`` with ZERO Python in the per-row path — the counting
-    member of the native-probe family (native Bloom / native quotient).
+    """Adds a bigint point-estimate column: the CMS frequency estimate for
+    each row's key (min over d rows; overestimate ≤ εN with prob ≥ 1−δ),
+    with ZERO Python in the per-row path and zero exchanges in the probe
+    plan. Keys are hashed JVM-side with the same ``xxhash64(cast
+    string)`` the build path uses, so probe and build agree
+    byte-for-byte.
 
     The CMS cell derivation is already Kirsch–Mitzenmacher over one
     xxhash64 (``sketches/cms.py:_cells``): ``h1 = h >> 32``,
@@ -336,36 +301,40 @@ def native_cms_probe(
     every step is an exact JVM long expression (h1 < 2^32, j·h2 < d·2^32
     ≪ 2^63, so ANSI arithmetic cannot overflow and signed math equals the
     kernel's uint64 math). The d×w count matrix rides a broadcast one-row
-    ``array<array<bigint>>`` relation; the estimate is ``least`` over the
-    d row lookups, evaluated inside whole-stage codegen. Identical
-    estimates to :func:`cms_probe` by construction."""
+    ``array<array<bigint>>`` relation (:func:`common.relation_probe`);
+    the estimate is ``least`` over the d row lookups, evaluated inside
+    whole-stage codegen.
+
+    The estimate is wrapped in ``pushdown_barrier`` (round 8): it keeps a
+    downstream filter on the estimate from inlining the d lookups into
+    the join condition (no codegen CSE there — the shared xxhash64/h1/h2
+    chain re-evaluates per lookup per row); the barriered ProjectExec
+    computes them once."""
+    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
+
     cms = CountMinSketch.from_bytes(state)
-    tdf = state_relation(
-        probe_df.sparkSession, state, "__cms_rows array<array<bigint>>",
-        lambda: cms.table.tolist(),
-    )
     h = F.xxhash64(F.col(key_col).cast("string"))
     h1 = F.call_function("shiftrightunsigned", h, F.lit(32))
     h2 = h.bitwiseAND(F.lit(0xFFFFFFFF)).bitwiseOR(F.lit(1))
     mask = F.lit(int(cms.w - 1))
-    lookups = []
-    for j in range(cms.d):
-        cell = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
-        row = F.element_at(F.col("__cms_rows"), F.lit(int(j) + 1))
-        lookups.append(F.element_at(row, cell.cast("int") + F.lit(1)))
-    est = F.least(*lookups) if len(lookups) > 1 else lookups[0]
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
 
-    # pushdown_barrier (round 8): keeps a downstream filter on the
-    # estimate from inlining the d lookups into the join condition (no
-    # codegen CSE there — the shared xxhash64/h1/h2 chain re-evaluates
-    # per lookup per row); the barriered ProjectExec computes them once
-    est = pushdown_barrier(est)
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, est)
-        .drop("__cms_rows")
+    def est(rows):
+        lookups = []
+        for j in range(cms.d):
+            cell = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
+            row = F.element_at(rows, F.lit(int(j) + 1))
+            lookups.append(F.element_at(row, cell.cast("int") + F.lit(1)))
+        return pushdown_barrier(F.least(*lookups) if len(lookups) > 1 else lookups[0])
+
+    return relation_probe(
+        probe_df, state, "__cms_rows array<array<bigint>>",
+        lambda: list(cms.table), est, out_col,
     )
+
+
+# One CMS probe: the JVM probe gives the pandas kernel's estimates and
+# measured no slower than it, warm or on a state's first probe.
+cms_probe = native_cms_probe
 
 
 def exact_group_count(df: DataFrame, key_col: str) -> DataFrame:

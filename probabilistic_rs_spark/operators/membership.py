@@ -10,19 +10,14 @@ approximate semi-join the Bloom filter exists for (SURVEY.md §2.7): a
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import published_state, state_relation
-from probabilistic_rs_spark.operators.sketch_agg import (
-    SketchSpec,
-    build_global_state,
-    sketch_aggregate,
-)
+from probabilistic_rs_spark.common import published_state, relation_probe
+from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, build_global_state
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
 
 
@@ -78,13 +73,28 @@ def bloom_probe(
     return probe_df.withColumn(out_col, probe(F.col(item_col).cast("string")))
 
 
+# the reserved column a semi filter probes into: never a caller's column
+_SEMI_COL = "__semi_member"
+
+
+def _semi_filter(probe, probe_df: DataFrame, item_col: str, state, **kwargs) -> DataFrame:
+    """Keep the rows ``probe`` marks as (probably) members: probe into a
+    reserved column, filter on it and drop it, so every column of
+    ``probe_df`` (an ``is_member`` among them) passes through as it is."""
+    return (
+        probe(probe_df, item_col, state, out_col=_SEMI_COL, **kwargs)
+        .where(F.col(_SEMI_COL))
+        .drop(_SEMI_COL)
+    )
+
+
 def bloom_semi_filter(
     probe_df: DataFrame, item_col: str, state: bytes
 ) -> DataFrame:
     """Approximate semi-join pre-filter: keep rows whose key is (probably)
     in the filter. At 100 TB this prunes the expensive exact join's input;
     the exact join downstream removes the ≤FPR false positives."""
-    return bloom_probe(probe_df, item_col, state).where(F.col("is_member")).drop("is_member")
+    return _semi_filter(bloom_probe, probe_df, item_col, state)
 
 
 # ---------------------------------------------------------------------------
@@ -164,16 +174,13 @@ def native_bloom_probe(
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
     sk = NativeBloomSketch.from_bytes(state)
-    bf_df = state_relation(
-        probe_df.sparkSession, state, "__nbf_words array<bigint>",
-        lambda: sk.words().tolist(),
+    return relation_probe(
+        probe_df, state, "__nbf_words array<bigint>", sk.words,
+        lambda words: pushdown_barrier(
+            _native_member_expr(item_col, words, sk.m, sk.k), boolean=True
+        ),
+        out_col,
     )
-    joined = probe_df.crossJoin(F.broadcast(bf_df))
-    member = pushdown_barrier(
-        _native_member_expr(item_col, F.col("__nbf_words"), sk.m, sk.k),
-        boolean=True,
-    )
-    return joined.withColumn(out_col, member).drop("__nbf_words")
 
 
 def native_bloom_semi_filter(
@@ -187,8 +194,4 @@ def native_bloom_semi_filter(
     tests each re-derived both KM base hashes per row; the barriered
     projection computes the two hashes once and the filter reads the
     materialized bit."""
-    return (
-        native_bloom_probe(probe_df, item_col, state, out_col="__nbf_member")
-        .where(F.col("__nbf_member"))
-        .drop("__nbf_member")
-    )
+    return _semi_filter(native_bloom_probe, probe_df, item_col, state)

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
-from probabilistic_rs_spark.common import published_state, state_relation
+from probabilistic_rs_spark.common import published_state, relation_probe
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.sketches.countsketch import CountSketch
 
@@ -309,36 +309,30 @@ def native_cs_probe(
     )
 
     cs = CountSketch.from_bytes(state)
-    # flat d·w layout: one element_at per read (index j·w + bucket)
-    tdf = state_relation(
-        probe_df.sparkSession, state, "__cs_flat array<bigint>",
-        lambda: cs.table.ravel().tolist(),
-    )
     h1, h2 = native_bloom_base_hash_exprs(F.col(key_col))
     mask = F.lit(int(cs.w - 1))
-    reads = []
-    for j in range(cs.d):
-        bucket = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
-        sign_bit = (
-            F.call_function(
-                "shiftrightunsigned",
-                h2 + F.lit(int(j)) * F.call_function("shiftrightunsigned", h1, F.lit(7)),
-                F.lit(20),
+
+    def est(flat):
+        # flat d·w layout: one element_at per read (index j·w + bucket)
+        reads = []
+        for j in range(cs.d):
+            bucket = (h1 + F.lit(int(j)) * h2).bitwiseAND(mask)
+            sign_bit = (
+                F.call_function(
+                    "shiftrightunsigned",
+                    h2 + F.lit(int(j)) * F.call_function("shiftrightunsigned", h1, F.lit(7)),
+                    F.lit(20),
+                )
+            ).bitwiseAND(F.lit(1))
+            sign = F.lit(1) - F.lit(2) * sign_bit
+            reads.append(
+                sign
+                * F.element_at(flat, (F.lit(int(j) * cs.w) + bucket).cast("int") + F.lit(1))
             )
-        ).bitwiseAND(F.lit(1))
-        sign = F.lit(1) - F.lit(2) * sign_bit
-        reads.append(
-            sign
-            * F.element_at(
-                F.col("__cs_flat"),
-                (F.lit(int(j) * cs.w) + bucket).cast("int") + F.lit(1),
-            )
-        )
-    est = pushdown_barrier(median_expr(reads))
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, est)
-        .drop("__cs_flat")
+        return pushdown_barrier(median_expr(reads))
+
+    return relation_probe(
+        probe_df, state, "__cs_flat array<bigint>", cs.table.ravel, est, out_col
     )
 
 

@@ -10,9 +10,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from probabilistic_rs_spark.common import published_state, state_relation
+from probabilistic_rs_spark.common import published_state, relation_probe
 from probabilistic_rs_spark.operators.sketch_agg import (
     SketchSpec,
+    build_global_state,
     sketch_aggregate,
     with_quantiles,
 )
@@ -95,14 +96,8 @@ def build_tdigest_state(
     """Distributed t-digest build over a numeric column; returns final
     state bytes on the driver (for broadcast probing with
     :func:`tdigest_cdf_probe`)."""
-    from probabilistic_rs_spark.operators.sketch_agg import resolve_tree_fanin
-
     spec = SketchSpec("td", "tdigest", value_col, {"delta": delta})
-    merged = sketch_aggregate(df, [], [spec], tree_fanin=resolve_tree_fanin(df, tree_fanin))
-    row = merged.select("td_state").head()
-    if row is None:  # empty input -> empty digest, not a crash
-        return spec.make().to_bytes()
-    return bytes(row["td_state"])
+    return build_global_state(df, spec, tree_fanin)
 
 
 def native_tdigest_cdf_probe(
@@ -181,30 +176,32 @@ def _resampled_cdf_probe(
     import numpy as np
 
     k = int(resolution)
-    # the resampled CDF table, cached per (state, resolution)
-    tdf = state_relation(
-        probe_df.sparkSession, state, "__cdf_table array<double>",
-        lambda: cdf_fn(np.linspace(vmin, vmax, k + 1)).tolist(), k,
-    )
     x = F.col(value_col).cast("double")
     span = (vmax - vmin) / k
     pos = (x - F.lit(vmin)) / F.lit(span)
     idx = F.least(F.greatest(F.floor(pos).cast("int"), F.lit(0)), F.lit(k - 1))
     frac = pos - idx.cast("double")
-    lo = F.element_at(F.col("__cdf_table"), idx + F.lit(1))
-    hi = F.element_at(F.col("__cdf_table"), idx + F.lit(2))
-    interp = lo + (hi - lo) * frac
     low_pred = (x <= F.lit(vmin)) if low_inclusive else (x < F.lit(vmin))
-    cdf = (
-        F.when(x.isNull(), F.lit(None).cast("double"))
-        .when(low_pred, F.lit(0.0))
-        .when(x >= F.lit(vmax), F.lit(1.0))
-        .otherwise(interp)
-    )
-    return (
-        probe_df.crossJoin(F.broadcast(tdf))
-        .withColumn(out_col, cdf)
-        .drop("__cdf_table")
+
+    def cdf(table):
+        lo = F.element_at(table, idx + F.lit(1))
+        hi = F.element_at(table, idx + F.lit(2))
+        return (
+            F.when(x.isNull(), F.lit(None).cast("double"))
+            .when(low_pred, F.lit(0.0))
+            .when(x >= F.lit(vmax), F.lit(1.0))
+            .otherwise(lo + (hi - lo) * frac)
+        )
+
+    # No pushdown_barrier, unlike the other JVM probes: the CDF has no
+    # hash chain to re-derive, and a filter on it inlined into the join
+    # condition measured faster (0.354 s against 0.423 s with a barrier,
+    # `.where(cdf > 0.5)` over 2M rows, local[4]). The resampled table is
+    # memoised per (state, resolution).
+    return relation_probe(
+        probe_df, state, "__cdf_table array<double>",
+        lambda: np.asarray(cdf_fn(np.linspace(vmin, vmax, k + 1)), dtype=np.float64),
+        cdf, out_col, k,
     )
 
 
@@ -214,14 +211,8 @@ def build_kll_state(
     """Distributed KLL build over a numeric column; returns final state
     bytes on the driver (for broadcast probing with
     :func:`kll_cdf_probe` / :func:`native_kll_cdf_probe`)."""
-    from probabilistic_rs_spark.operators.sketch_agg import resolve_tree_fanin
-
     spec = SketchSpec("kll", "kll", value_col, {"k": k})
-    merged = sketch_aggregate(df, [], [spec], tree_fanin=resolve_tree_fanin(df, tree_fanin))
-    row = merged.select("kll_state").head()
-    if row is None:
-        return spec.make().to_bytes()
-    return bytes(row["kll_state"])
+    return build_global_state(df, spec, tree_fanin)
 
 
 def kll_cdf_probe(

@@ -36,8 +36,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import published_state, state_relation
+from probabilistic_rs_spark.common import published_state, relation_probe
 from probabilistic_rs_spark.errors import SketchConfigError
+from probabilistic_rs_spark.operators.membership import _semi_filter
 from probabilistic_rs_spark.operators.shards import (
     ShardFamily,
     apply_ops_shards,
@@ -99,7 +100,7 @@ def quotient_probe(
     )
 
 
-def _quotient_buckets(sk: QuotientFilter, b: int) -> list[list[int]]:
+def _quotient_buckets(sk: QuotientFilter, b: int) -> list[np.ndarray]:
     """The filter's sorted fingerprint run split into 2^b buckets by the
     top b fingerprint bits — the value of the one-row
     ``array<array<bigint>>`` relation the native probe cross-joins. The
@@ -113,7 +114,7 @@ def _quotient_buckets(sk: QuotientFilter, b: int) -> list[list[int]]:
     # negative longs on both sides — equality still matches because
     # the JVM probe expression produces the identical bit pattern
     vals = fps.astype(np.int64, copy=False) if fps.dtype == np.uint64 else fps.astype(np.int64)
-    return [vals[s:e].tolist() for s, e in zip(starts.tolist(), ends.tolist())]
+    return [vals[s:e] for s, e in zip(starts.tolist(), ends.tolist())]
 
 
 def _quotient_member_expr(item_col: str, barr, p: int, b: int):
@@ -157,22 +158,20 @@ def native_quotient_probe(
     notes). For larger runs raise ``bucket_bits``."""
     sk = QuotientFilter.from_bytes(state)
     b = min(bucket_bits, sk.p)
-    bdf = state_relation(
-        probe_df.sparkSession, state, "__qf_buckets array<array<bigint>>",
-        lambda: _quotient_buckets(sk, b), b,
-    )
-    joined = probe_df.crossJoin(F.broadcast(bdf))
     from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
 
     # pushdown_barrier (round 8): keep a downstream .where(is_member)
     # from inlining the fingerprint derivation + bucket scan into the
     # join condition (evaluated without codegen subexpression
     # elimination — the xxhash64 chain re-evaluates per reference)
-    member = pushdown_barrier(
-        _quotient_member_expr(item_col, F.col("__qf_buckets"), sk.p, b),
-        boolean=True,
+    return relation_probe(
+        probe_df, state, "__qf_buckets array<array<bigint>>",
+        lambda: _quotient_buckets(sk, b),
+        lambda buckets: pushdown_barrier(
+            _quotient_member_expr(item_col, buckets, sk.p, b), boolean=True
+        ),
+        out_col, b,
     )
-    return joined.withColumn(out_col, member).drop("__qf_buckets")
 
 
 def native_quotient_semi_filter(
@@ -182,12 +181,8 @@ def native_quotient_semi_filter(
     is evaluated once in a barriered ProjectExec (round 8 — in the join
     condition it would be evaluated without codegen CSE) and the filter
     reads the materialized bit."""
-    return (
-        native_quotient_probe(
-            probe_df, item_col, state, out_col="__nqf_member", bucket_bits=bucket_bits
-        )
-        .where(F.col("__nqf_member"))
-        .drop("__nqf_member")
+    return _semi_filter(
+        native_quotient_probe, probe_df, item_col, state, bucket_bits=bucket_bits
     )
 
 

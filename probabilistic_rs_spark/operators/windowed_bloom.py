@@ -19,8 +19,6 @@ timestamps, so late data is mis-filed into the current level —
 
 from __future__ import annotations
 
-import datetime as _dt
-
 import numpy as np
 import pandas as pd
 
@@ -28,7 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
-from probabilistic_rs_spark.common import published_state, state_relation
+from probabilistic_rs_spark.common import published_state, relation_probe
 from probabilistic_rs_spark.errors import SketchConfigError
 from probabilistic_rs_spark.operators.sketch_agg import SketchSpec, sketch_aggregate
 from probabilistic_rs_spark.sketches.bloom import BloomSketch
@@ -271,7 +269,10 @@ def native_probe_recent(
     (``src/ebloom/filter.rs:602-638``) entirely inside whole-stage
     codegen. All levels must share one (m, k) config (they do by
     construction — one spec builds every window)."""
+    from functools import reduce
+
     from probabilistic_rs_spark.operators.membership import _native_member_expr
+    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
     from probabilistic_rs_spark.sketches.native_bloom import NativeBloomSketch
 
     if not level_states:
@@ -288,27 +289,22 @@ def native_probe_recent(
             f"native_probe_recent needs one shared (m, k) across levels, got {mk}"
         )
     m, k = mk.pop()
-    ldf = state_relation(
-        probe_df.sparkSession, [blob for _, _, blob in level_states],
-        "__wbl_words array<array<bigint>>",
-        lambda: [sk.words().tolist() for sk in sketches],
-    )
-    member = None
-    for lv in range(len(sketches)):
-        warr = F.element_at(F.col("__wbl_words"), F.lit(lv + 1))
-        term = _native_member_expr(item_col, warr, m, k)
-        member = term if member is None else (member | term)
-    from probabilistic_rs_spark.operators.sketch_agg import pushdown_barrier
+
+    def member(levels):
+        terms = [
+            _native_member_expr(item_col, F.element_at(levels, F.lit(lv + 1)), m, k)
+            for lv in range(len(sketches))
+        ]
+        return pushdown_barrier(reduce(lambda a, b: a | b, terms), boolean=True)
 
     # pushdown_barrier (round 8): a downstream .where(is_member) would
     # otherwise inline all levels·k bit tests into the join condition,
     # which is evaluated without codegen subexpression elimination — the
     # KM base hashes re-derived per bit test per row
-    member = pushdown_barrier(member, boolean=True)
-    return (
-        probe_df.crossJoin(F.broadcast(ldf))
-        .withColumn(out_col, member)
-        .drop("__wbl_words")
+    return relation_probe(
+        probe_df, [blob for _, _, blob in level_states],
+        "__wbl_words array<array<bigint>>",
+        lambda: [sk.words() for sk in sketches], member, out_col,
     )
 
 

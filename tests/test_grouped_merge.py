@@ -7,7 +7,9 @@ the Arrow grouping of ``sketch_partials``:
   Spark's exact ``count`` / ``count_distinct``;
 * nested (struct) keys fail on the driver before any job launches;
 * merged states are bit-identical to a pid-sorted driver fold of the
-  collected partials, on the grouped, global and tree-merged paths.
+  collected partials, on the grouped, global and tree-merged paths;
+* the global builds (``build_global_state``) give the bytes of the
+  ``sketch_aggregate`` state on both sides of the tree-fanin threshold.
 """
 
 from __future__ import annotations
@@ -199,3 +201,36 @@ def test_merged_states_equal_pid_sorted_driver_fold(spark, group_cols, tree_fani
         for spec, g, w in zip(_SPECS, got[key][0], want[key][0]):
             assert g == w, (key, spec.kind)
         assert got[key][1] == want[key][1]
+
+
+@pytest.mark.parametrize("partitions", [4, 200])
+def test_global_builds_equal_sketch_aggregate_state(spark, partitions):
+    # the CMS, t-digest and KLL global builds run build_global_state: a
+    # driver fold at 4 partitions, the fanin-64 tree at 200; both must
+    # give the bytes of the executor-side sketch_aggregate state
+    from probabilistic_rs_spark.operators.heavy_hitters import build_cms_state
+    from probabilistic_rs_spark.operators.quantiles import (
+        build_kll_state,
+        build_tdigest_state,
+    )
+    from probabilistic_rs_spark.operators.sketch_agg import (
+        _global_strategy,
+        resolve_tree_fanin,
+    )
+
+    df = spark.range(0, 20_000, 1, numPartitions=partitions).select(
+        (F.col("id") * 7919 % 1500).cast("string").alias("k"),
+        ((F.col("id") * 104729) % 10007 / 7.0).alias("x"),
+    )
+    fanin = resolve_tree_fanin(df, "auto")
+    assert fanin == (None if partitions == 4 else 64)
+    builds = [
+        (build_cms_state(df, "k", eps=0.01, delta=0.01),
+         SketchSpec("cms", "cms", "k", {"eps": 0.01, "delta": 0.01})),
+        (build_tdigest_state(df, "x"), SketchSpec("td", "tdigest", "x", {"delta": 200.0})),
+        (build_kll_state(df, "x"), SketchSpec("kll", "kll", "x", {"k": 200})),
+    ]
+    for got, spec in builds:
+        assert _global_strategy(df, spec, "auto") == fanin
+        merged = sketch_aggregate(df, [], [spec], tree_fanin=fanin)
+        assert got == bytes(merged.select(spec.state_col).head()[0]), spec.kind

@@ -63,28 +63,55 @@ class TestPushdownBarrier:
         )
         assert "Filter" in plan
 
-    @pytest.mark.parametrize("family", ["bloom", "quotient", "cuckoo"])
+    @pytest.mark.parametrize("family", ["bloom", "quotient", "cuckoo", "cms", "recent"])
     def test_native_bloom_semi_filter_join_carries_no_bit_tests(self, spark, family):
         # every native semi filter is its probe plus a filter on the
-        # barriered column, so each keeps the predicate out of the join
-        from probabilistic_rs_spark.operators import cuckoo, membership, quotient
+        # barriered column, so each keeps the predicate out of the join;
+        # so does a filter on the CMS estimate or on the windowed
+        # (expiring Bloom) membership column
+        from probabilistic_rs_spark.operators import (
+            cuckoo,
+            heavy_hitters,
+            membership,
+            quotient,
+            windowed_bloom,
+        )
 
         orders = spark.read.parquet(f"{SF}/orders.parquet")
+        probes = orders.select(F.col("o_custkey").alias("k"))
         if family == "bloom":
             state = membership.build_native_bloom_state(orders, "o_custkey", capacity=50_000)
-            semi = membership.native_bloom_semi_filter
+            q = membership.native_bloom_semi_filter(probes, "k", state)
         elif family == "quotient":
             state = quotient.build_quotient_state(orders, "o_custkey", capacity=50_000)
-            semi = quotient.native_quotient_semi_filter
-        else:
+            q = quotient.native_quotient_semi_filter(probes, "k", state)
+        elif family == "cuckoo":
             state = cuckoo.build_cuckoo_shards(
                 orders, "o_custkey", capacity=50_000, n_shards=4, native=True
             )
-            semi = cuckoo.native_cuckoo_semi_filter
-        probes = orders.select(F.col("o_custkey").alias("k"))
-        plan = _final_plan(semi(probes, "k", state))
+            q = cuckoo.native_cuckoo_semi_filter(probes, "k", state)
+        elif family == "cms":
+            state = heavy_hitters.build_cms_state(orders, "o_custkey", eps=0.01, delta=0.01)
+            q = heavy_hitters.native_cms_probe(probes, "k", state).where(
+                F.col("est_count") > 1
+            )
+        else:
+            ev = spark.read.parquet(f"{SF}/events.parquet")
+            levels = windowed_bloom.recent_level_states(
+                windowed_bloom.windowed_bloom_states(
+                    ev, "ts", "user_id", "7 days", capacity_per_level=50_000,
+                    engine="native",
+                ),
+                num_levels=3,
+            )
+            q = windowed_bloom.native_probe_recent(
+                ev.select(F.col("user_id").alias("k")), "k", levels
+            ).where(F.col("is_member"))
+        plan = _final_plan(q)
         join_lines = [
             ln for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln
         ]
         assert join_lines, plan[:1500]
-        assert not any("shiftrightunsigned" in ln for ln in join_lines), join_lines
+        assert not any(
+            "shiftrightunsigned" in ln or "xxhash64" in ln for ln in join_lines
+        ), join_lines

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from probabilistic_rs_spark.datagen import pages_df
@@ -214,6 +216,39 @@ def test_bloom_semi_filter_prunes(spark, pages):
     kept = bloom_semi_filter(mixed, "url", state)
     assert kept.count() <= pages.count() + 30  # all members + ≤FPR stragglers
     assert kept.count() >= pages.count()
+
+
+@pytest.mark.parametrize("family", ["bloom", "native_bloom", "quotient", "cuckoo"])
+def test_semi_filters_keep_caller_columns(spark, family):
+    # a semi filter probes into a reserved column: the caller's own
+    # is_member column and its values come through untouched
+    from probabilistic_rs_spark.operators import cuckoo, membership, quotient
+
+    df = spark.range(200).select(
+        "id",
+        F.concat(F.lit("m"), F.col("id")).alias("k"),
+        (F.col("id") % 3 == 0).alias("is_member"),
+    )
+    members = df.where(F.col("id") < 100)
+    if family == "bloom":
+        state = membership.build_bloom_state(members, "k", capacity=1_000)
+        semi = membership.bloom_semi_filter
+    elif family == "native_bloom":
+        state = membership.build_native_bloom_state(members, "k", capacity=1_000)
+        semi = membership.native_bloom_semi_filter
+    elif family == "quotient":
+        state = quotient.build_quotient_state(members, "k", capacity=1_000)
+        semi = quotient.native_quotient_semi_filter
+    else:
+        state = cuckoo.build_cuckoo_shards(
+            members, "k", capacity=1_000, n_shards=2, native=True
+        )
+        semi = cuckoo.native_cuckoo_semi_filter
+    kept = semi(df, "k", state)
+    assert kept.columns == df.columns
+    rows = kept.collect()
+    assert {r["id"] for r in rows} >= set(range(100))  # no false negatives
+    assert all(r["is_member"] == (r["id"] % 3 == 0) for r in rows)
 
 
 # --- multi-sketch single pass + parallelism invariance -----------------------
@@ -435,31 +470,47 @@ def test_tdigest_cdf_probe_matches_exact_ranks(spark):
         assert abs(got[p] - exact) <= 0.01, (p, got[p], exact)
 
 
+_KEY = st.one_of(st.none(), st.text("abé", max_size=3))
+
+
 class TestNativeCmsProbe:
-    """JVM-expression CMS point probe: identical estimates to the pandas
-    kernel, zero Python in the per-row plan."""
+    """JVM-expression CMS point probe (``cms_probe`` is the same
+    function): estimates equal to the numpy core's, zero Python in the
+    per-row plan."""
 
-    def test_agrees_with_python_kernel(self, spark):
-        from pyspark.sql import functions as F
-
+    @settings(
+        max_examples=8,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        keys=st.lists(_KEY, min_size=1, max_size=120),
+        absent=st.lists(_KEY, max_size=30),
+    )
+    def test_agrees_with_python_kernel(self, spark, keys, absent):
         from probabilistic_rs_spark.operators.heavy_hitters import (
             build_cms_state,
             cms_probe,
             native_cms_probe,
         )
+        from probabilistic_rs_spark.sketches.cms import CountMinSketch
 
-        df = spark.range(0, 60_000).select(
-            F.concat(F.lit("k"), (F.col("id") % 500)).alias("k")
-        )
-        state = build_cms_state(df, "k", eps=0.001, delta=0.01)
-        probes = spark.range(0, 700).select(
-            F.concat(F.lit("k"), F.col("id")).alias("k")
-        )
-        a = {r["k"]: r["est_count"] for r in cms_probe(probes, "k", state).collect()}
-        b = {r["k"]: r["est_count"] for r in native_cms_probe(probes, "k", state).collect()}
-        assert a == b
-        # CMS guarantee: never under-estimates a present key
-        assert all(b[f"k{i}"] >= 120 for i in range(500))
+        assert cms_probe is native_cms_probe
+        df = spark.createDataFrame([(k,) for k in keys], "k string").repartition(3)
+        # a narrow sketch, so collisions make the estimates differ from
+        # the exact counts
+        state = build_cms_state(df, "k", eps=0.05, delta=0.05)
+        probes = spark.createDataFrame(
+            list(enumerate(keys + absent)), "i int, k string"
+        ).withColumn("h", F.xxhash64(F.col("k").cast("string")))
+        got = native_cms_probe(probes, "k", state).collect()
+        # the numpy core over the driver-collected hashes of the same rows
+        hashes = np.array([r["h"] for r in got], dtype=np.int64).view(np.uint64)
+        want = CountMinSketch.from_bytes(state).estimate_hashes(hashes)
+        assert [r["est_count"] for r in got] == want.astype(np.int64).tolist()
+        # CMS guarantee: never under-estimates a present key (null too)
+        est = {r["k"]: r["est_count"] for r in got}
+        assert all(est[k] >= keys.count(k) for k in keys)
 
     def test_plan_is_jvm_only(self, spark):
         from pyspark.sql import functions as F

@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 
 @pytest.fixture(scope="module")
 def events(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/events.parquet").cache()
+    # unpersisted on teardown: a cached relation over this path would
+    # otherwise serve (and shape the plans of) later tests that read it
+    df = spark.read.parquet("/root/testdata/sf0.001/events.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 class TestFamilyAwareChunkStore:
