@@ -706,28 +706,23 @@ def _q_cms_probe_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CMS point probes: one build (counting analog of contains_bulk,
     src/bloom/filter.rs:440-477), estimated per probe row by the all-JVM
     codegen probe (``least`` over d broadcast-row lookups — zero Python
-    per probe row). ``cms_probe`` is now an alias of ``native_cms_probe``,
-    so both columns come from one probe; they keep the names
-    ``est_pandas`` and ``est_native`` so the result hash is unchanged.
-    Both are exact here (event_type cardinality ≪ w, no collisions) and
-    must agree with the exact-count oracle."""
+    per probe row). ``cms_probe`` is an alias of ``native_cms_probe``, so
+    one probe fills both columns; they keep the names ``est_pandas`` and
+    ``est_native`` so the result hash is unchanged. The estimates are
+    exact here (event_type cardinality ≪ w, no collisions) and must
+    agree with the exact-count oracle."""
     from probabilistic_rs_spark.operators.heavy_hitters import (
         build_cms_state,
-        cms_probe,
         native_cms_probe,
     )
 
     ev = _t(spark, sf_dir, "events")
     state = build_cms_state(ev, "event_type", eps=0.001, delta=0.001)
     probes = ev.select("event_type").distinct()
-    pandas_est = cms_probe(probes, "event_type", state).select(
-        F.col("event_type").alias("key"), F.col("est_count").alias("est_pandas")
-    )
-    native_est = native_cms_probe(probes, "event_type", state).select(
-        F.col("event_type").alias("key"), F.col("est_count").alias("est_native")
-    )
-    return pandas_est.join(native_est, "key", "full").select(
-        "key", "est_pandas", "est_native"
+    return native_cms_probe(probes, "event_type", state).select(
+        F.col("event_type").alias("key"),
+        F.col("est_count").alias("est_pandas"),
+        F.col("est_count").alias("est_native"),
     )
 
 

@@ -205,9 +205,10 @@ def test_merged_states_equal_pid_sorted_driver_fold(spark, group_cols, tree_fani
 
 @pytest.mark.parametrize("partitions", [4, 200])
 def test_global_builds_equal_sketch_aggregate_state(spark, partitions):
-    # the CMS, t-digest and KLL global builds run build_global_state: a
-    # driver fold at 4 partitions, the fanin-64 tree at 200; both must
-    # give the bytes of the executor-side sketch_aggregate state
+    # the CMS, t-digest and KLL global builds run build_global_state: the
+    # fanin-64 tree at 200 partitions; at 4, a driver fold for t-digest
+    # and KLL and one executor merge for CMS (FOLD_ON_EXECUTOR); every
+    # path must give the bytes of the sketch_aggregate state
     from probabilistic_rs_spark.operators.heavy_hitters import build_cms_state
     from probabilistic_rs_spark.operators.quantiles import (
         build_kll_state,
@@ -231,6 +232,7 @@ def test_global_builds_equal_sketch_aggregate_state(spark, partitions):
         (build_kll_state(df, "x"), SketchSpec("kll", "kll", "x", {"k": 200})),
     ]
     for got, spec in builds:
-        assert _global_strategy(df, spec, "auto") == fanin
+        on_executor = spec.kind == "cms"
+        assert _global_strategy(df, spec, "auto") == (fanin or (1 if on_executor else None))
         merged = sketch_aggregate(df, [], [spec], tree_fanin=fanin)
         assert got == bytes(merged.select(spec.state_col).head()[0]), spec.kind
